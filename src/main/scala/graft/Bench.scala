@@ -50,7 +50,7 @@ object Bench {
 
     // streaming micro-bench FIRST, before the batch suite touches the
     // heap: the tws number's documented 18-26k envelope was measured
-    // standalone (fresh JVM running just the probes — TwsProfile), and
+    // standalone (fresh JVM running just the probes; COVERAGE.md), and
     // round 10 showed the same code reading ~2× lower when the fragment
     // ran AFTER 185 batch queries in a 600 s session (old-gen pressure
     // + fragmented humongous regions depress the RocksDB path). Running
@@ -88,7 +88,7 @@ object Bench {
     // OPTIMIZATION_r15.md): the timed action is now the noop sink —
     // every column of every row is computed and discarded — instead of
     // `.count()`. A count lets the optimizer prune columns and whole
-    // subtrees: a round-15 audit (tools/CountPruneAudit) found 167/193
+    // subtrees: a round-15 audit (OPTIMIZATION_r15.md) found 167/193
     // queries losing at least their final sort under count, and ~30
     // losing REAL work — ev1_ann_recall's count plan dropped 5 joins +
     // 16 aggregates + 2 windows (its shipped number timed a fraction

@@ -332,7 +332,7 @@ object Multimodal {
     * accidental band collisions grow Θ(n²/2¹⁶) once the corpus
     * approaches 2^bandBits rows per band — at that scale either keep
     * the probe-vs-corpus serve shape (cost linear in the corpus for a
-    * bounded probe set; ScaleProbe measures it) or widen bands /
+    * bounded probe set; PLANS.md records its scaling) or widen bands /
     * multi-index the way production image-dedup systems do.
     *
     * Inputs are (doc_id, phash) frames ([[dHash64]]'s shape); output:

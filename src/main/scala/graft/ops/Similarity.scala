@@ -625,7 +625,7 @@ object Similarity {
     * [[cosineNearDupPairs]] blocked on `cent_id` and a left-anti join
     * on the dropped ids. Nothing crosses cluster boundaries.
     *
-    * K-SIZING AT SCALE (ScaleProbe round-10 finding): with K ∝ n
+    * K-SIZING AT SCALE (round-10 finding, PLANS.md): with K ∝ n
     * (constant cluster occupancy) the pairwise stays O(n), but the
     * ASSIGNMENT pass is n·K = Θ(n²) — measured exponent 1.09 at
     * 20k→80k vectors where the 3k→12k probe read 0.01 (fixed costs
@@ -653,7 +653,7 @@ object Similarity {
   }
 
   /** Two-level (coarse → fine) centroid assignment — the O(n·√K)
-    * answer to the ScaleProbe round-10 finding that flat assignment's
+    * answer to the round-10 finding (PLANS.md) that flat assignment's
     * n·K scoring is the quadratic hiding in K ∝ n SemDeDup (IVF's own
     * coarse-quantizer trick applied to the clustering step):
     *
@@ -664,7 +664,7 @@ object Similarity {
     *
     * APPROXIMATE by design: a vector near a coarse boundary may pick a
     * slightly-worse fine centroid than flat assignment would. Measured
-    * on the adversarial ScaleProbe fixture (500 tight clusters vs 40
+    * on the adversarial `OpsSpec` fixture (500 tight clusters vs 40
     * centroids, near-orthogonal geometry — argmaxes weakly
     * determined): per-vector argmax agreement with flat is ~62%, but
     * the metric that matters for SemDeDup — blocking recall — holds

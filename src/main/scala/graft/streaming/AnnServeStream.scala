@@ -42,8 +42,8 @@ object AnnServeStream {
   /** Pinned-replica broadcasts still held per live serve query — each
     * `pinSnapshot` start registers its two broadcasts here and a
     * [[QueryCleanup]] hook destroys + deregisters them at termination,
-    * so a session that restarts the serve stream N times (the bench /
-    * ServePinCompare pattern) holds at most the ACTIVE streams'
+    * so a session that restarts the serve stream N times (the bench's
+    * pinned-vs-unpinned comparison) holds at most the ACTIVE streams'
     * replicas in executor memory, never N dead ones. Package-visible so
     * the spec can assert the release actually happens.
     */
@@ -170,12 +170,14 @@ object AnnServeStream {
       }
       // the replica dies with the stream: destroy (driver + executor
       // copies — no epoch can reference the broadcast after termination)
-      // and deregister, so restarts never accumulate dead replicas
+      // and deregister, so restarts never accumulate dead replicas.
+      // Destroy FIRST: a deregistered query must hold no live replica
+      // (the termination listener runs on its own thread, so a reader
+      // of the registry can see the removal before a later destroy)
       pinnedBroadcasts.put(query.id, Seq(bcCents, bcLists))
       QueryCleanup.onTermination(s0, query) { () =>
-        pinnedBroadcasts.remove(query.id)
-        bcCents.destroy()
-        bcLists.destroy()
+        try { bcCents.destroy(); bcLists.destroy() }
+        finally { pinnedBroadcasts.remove(query.id); () }
       }
       query
     }

@@ -168,8 +168,8 @@ object CurationStream {
     // stays the crash-replay record: a replayed trigger gets None from
     // every already-landed tier and falls back to the frozen read.
     // This removes the per-boundary existence walk + listing + schema
-    // inference + parquet scan that LadderProfile measured as the
-    // dominant share of the ~1-3 s/trigger/tier fixed cost.
+    // inference + parquet scan measured (PLANS.md, ladder attribution)
+    // as the dominant share of the ~1-3 s/trigger/tier fixed cost.
     val docs = lineDedup match {
       case Some(ld) => TriggerTiming.timed("ladder", "line") {
         LineDedupGate.applyBatch(ld.store, ld.table, batch, batchId,

@@ -41,16 +41,23 @@ object Dashboard {
 
   /** GET /sync-log — newest audit page, optional table LIKE filter. */
   def syncLog(spark: SparkSession, tableLike: Option[String] = None): DataFrame = {
-    val where = tableLike.fold("")(t =>
-      s" WHERE UPPER(table_name) LIKE '%${t.toUpperCase}%'")
-    spark.sql(s"SELECT * FROM SYNC_LOG$where ORDER BY log_time DESC LIMIT 50")
+    val (where, args) = tableFilter(tableLike)
+    spark.sql(s"SELECT * FROM SYNC_LOG$where ORDER BY log_time DESC LIMIT 50", args)
   }
 
   /** GET /stats — status breakdown, optional table LIKE filter. */
   def stats(spark: SparkSession, tableLike: Option[String] = None): DataFrame = {
-    val where = tableLike.fold("")(t =>
-      s" WHERE UPPER(table_name) LIKE '%${t.toUpperCase}%'")
+    val (where, args) = tableFilter(tableLike)
     spark.sql(
-      s"SELECT status, COUNT(*) AS cnt FROM SYNC_LOG$where GROUP BY status ORDER BY status")
+      s"SELECT status, COUNT(*) AS cnt FROM SYNC_LOG$where GROUP BY status ORDER BY status",
+      args)
   }
+
+  /** The optional table LIKE filter as a WHERE clause plus its named
+    * parameter: the user's text is bound, never spliced into the SQL,
+    * so a quote in it is data, not syntax.
+    */
+  private def tableFilter(tableLike: Option[String]): (String, Map[String, Any]) =
+    tableLike.fold(("", Map.empty[String, Any]))(t =>
+      (" WHERE UPPER(table_name) LIKE :pat", Map("pat" -> s"%${t.toUpperCase}%")))
 }

@@ -170,7 +170,7 @@ object IngestDedup {
     *
     * `shufflePartitions` sizes the session's shuffle width to the
     * TRIGGER volume, the same argument as [[SyncPipeline]]'s
-    * `statePartitions`: an ingest trigger is small by construction, so
+    * shuffle-partition constant: an ingest trigger is small by construction, so
     * per-trigger cost is fixed per-partition work (task launch, file
     * commit) — 32 batch-analytics partitions for a ~1k-doc trigger is
     * nearly all overhead. The default matches the index's bucket count

@@ -32,8 +32,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * CCNet pass.
   *
   * `narrowState = true` stores hash60(line) (one long) instead of the
-  * line text — the 100 TB layout. MEASURED (LineStateLayout, 20M-row
-  * state, 12k-key trigger probe, warm draws): the gate's exact read
+  * line text — the 100 TB layout. MEASURED (20M-row state, 12k-key
+  * trigger probe, warm draws; recorded in PLANS.md): the gate's exact read
   * shape (bucketed scan + broadcast semi-join + merge-on-read
   * aggregate) runs 2.4-2.7 s keyed by text vs 0.5-0.8 s keyed by the
   * long — 3-4×, and the delta is the STRING hash-probe cost

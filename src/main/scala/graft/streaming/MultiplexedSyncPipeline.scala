@@ -24,10 +24,11 @@ import graft.cdc._
   * against the registry schema inside the batch; `seq` / `event_ts` /
   * `change_hash` / `operation` stay top-level for the dedup operator.
   *
-  * MEASURED trade (MuxProfile, local[32], six topics, same workload as
-  * the concurrent bench probe): consolidation pays the framework
-  * per-trigger fixed cost (offset/commit logs, planning, per-partition
-  * state commits) ONCE per wave instead of six times — but the
+  * MEASURED trade (local[32], six topics, same workload as the
+  * concurrent bench probe; recorded in COVERAGE.md): consolidation
+  * pays the framework per-trigger fixed cost (offset/commit logs,
+  * planning, per-partition state commits) ONCE per wave instead of
+  * six times — but the
   * six-query topology runs those six triggers' entire front halves AND
   * applies concurrently, hiding their fixed costs in parallel slack
   * that the consolidated query's front-half → fan-out barrier cannot
@@ -44,9 +45,9 @@ import graft.cdc._
   * triggers, one state operator sized for the sum of topics. Both
   * forms share every stage, so switching is a config change.
   *
-  * CROSSOVER, measured (round 9, MuxProfile under core-capped
-  * sessions, six topics): with cores ≥ queries the concurrent topology
-  * keeps its parallel-slack win — local[8]: mux 794 vs conc 865 ev/s
+  * CROSSOVER, measured (round 9 under core-capped sessions, six
+  * topics; recorded in COVERAGE.md): with cores ≥ queries the
+  * concurrent topology keeps its parallel-slack win — local[8]: mux 794 vs conc 865 ev/s
   * at 500-row triggers, 6,218 vs 6,510 at 4,000 — but once cores drop
   * BELOW the query count the six trigger threads contend instead of
   * overlapping and the consolidated form wins outright — local[4]:
@@ -60,22 +61,11 @@ final class MultiplexedSyncPipeline(
     store: SnapshotStore,
     trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
     watermarkDelay: String = "10 minutes",
-    loopWindowMs: Long = LoopDedup.windowMsDefault,
-    loopTtlMs: Long = LoopDedup.ttlMsDefault,
-    /** Unlike [[SyncPipeline]]'s lower-only dial, this SETS the value:
-      * the consolidated query's state operator carries the SUM of all
-      * topics' trigger volume, so sizing it to a single topic's volume
-      * (the session may have been tuned for per-topic queries) would
-      * serialize the one stage that every topic now shares. Default 6
-      * measured best for six ~4k-row topic slices per trigger on one
-      * node (12 paid more per-partition state fixed cost than the
-      * extra parallelism returned); size to summed rows per trigger on
-      * a cluster.
-      */
-    statePartitions: Option[Int] = Some(6)) {
+    loopTtlMs: Long = LoopDedupTws.ttlMsDefault) {
 
-  private val inner = new SyncPipeline(spark, store, trigger, watermarkDelay,
-    loopWindowMs, loopTtlMs, statePartitions = statePartitions)
+  // only its per-topic `transformed` and `applyMicroBatch` are used,
+  // neither of which reads the inner pipeline's query options
+  private val inner = new SyncPipeline(spark, store)
 
   private def payloadSchema(m: TableMapping, d: Direction.Value): StructType = {
     val target = m.targetFor(d)
@@ -90,14 +80,9 @@ final class MultiplexedSyncPipeline(
       source: DataFrame,
       pairs: Seq[(TableMapping, Direction.Value)],
       checkpoint: String): StreamingQuery = {
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
+    LoopDedupTws.configureSession(spark)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      MultiplexedSyncPipeline.shufflePartitions.toString)
     // spread the raw (topic, value) rows BEFORE the per-topic branches:
     // the map-side work (envelope parse + transform + payload encode)
     // otherwise runs on the source's own partitioning — often one or
@@ -105,7 +90,7 @@ final class MultiplexedSyncPipeline(
     // blocks) — which serializes exactly the stage consolidation is
     // supposed to parallelize. One narrow-row exchange buys map-side
     // parallelism equal to the state tier's.
-    val spread = statePartitions.map(source.repartition(_)).getOrElse(source)
+    val spread = source.repartition(MultiplexedSyncPipeline.shufflePartitions)
     val branches = pairs.map { case (m, d) =>
       val targetCols = m.specsFor(d).map(_._1)
       inner.transformed(spread, m, d)
@@ -115,7 +100,7 @@ final class MultiplexedSyncPipeline(
     }
     val union = branches.reduce(_ unionByName _)
       .withWatermark("event_ts", watermarkDelay)
-    val deduped = LoopDedupTws(union, loopWindowMs, loopTtlMs)
+    val deduped = LoopDedupTws(union, ttlMs = loopTtlMs)
     deduped.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -161,4 +146,20 @@ final class MultiplexedSyncPipeline(
       }
       .start()
   }
+}
+
+object MultiplexedSyncPipeline {
+
+  /** Shuffle/state partition count, SET on the session at
+    * [[MultiplexedSyncPipeline.start]] (unlike [[SyncPipeline]]'s
+    * lower-only value) and used to spread the source: the consolidated
+    * query's state operator carries the SUM of all topics' trigger
+    * volume, so sizing it to a single topic's volume (the session may
+    * have been tuned for per-topic queries) would serialize the one
+    * stage that every topic now shares. 6 measured best for six
+    * ~4k-row topic slices per trigger on one node (12 paid more
+    * per-partition state fixed cost than the extra parallelism
+    * returned); size to summed rows per trigger on a cluster.
+    */
+  private val shufflePartitions = 6
 }

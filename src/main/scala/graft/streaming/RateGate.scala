@@ -67,8 +67,8 @@ import org.apache.spark.sql.functions._
   * round-15 candidate of overlapping the independent epoch writes
   * ([[graft.Par]] — sample/admit here, pass/reject in the quality and
   * quota gates) A/B'd SLOWER on the 8-tier ladder (64 [60, 67] vs
-  * 72 [66, 84] docs/s, SQL exec wall 180 s vs 142 s, quiet host,
-  * `LadderExecProfile`): trigger-sized epoch writes are executor-bound
+  * 72 [66, 84] docs/s, SQL exec wall 180 s vs 142 s, quiet host;
+  * recorded in COVERAGE.md): trigger-sized epoch writes are executor-bound
   * enough that two concurrent commits contend for task slots, costing
   * more than the overlapped driver-side plan analysis saves. Par stays
   * right for mixed driver/executor phases (ingest probe+commit), wrong

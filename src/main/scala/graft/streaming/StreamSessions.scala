@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * watermark passes its end. `dropDuplicatesWithinWatermark` keeps keys
   * only until the watermark clears them — bounded state without a
   * custom processor for the plain "same id replayed" case (the
-  * hash-window LOOP variant with audit stays in LoopDedup/LoopDedupTws).
+  * hash-window LOOP variant with audit stays in LoopDedupTws).
   */
 object StreamSessions {
 

@@ -29,28 +29,7 @@ final class SyncPipeline(
     store: SnapshotStore,
     trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
     watermarkDelay: String = "10 minutes",
-    loopWindowMs: Long = LoopDedup.windowMsDefault,
-    loopTtlMs: Long = LoopDedup.ttlMsDefault,
-    /** transformWithState dedup (Spark 4's supported stateful API,
-      * RocksDB-backed state with declarative TTL) is the default;
-      * `false` falls back to the flatMapGroupsWithState variant.
-      */
-    useTws: Boolean = true,
-    /** Shuffle/state partition count for the streaming query, set on
-      * the session at [[start]] (the first micro-batch bakes it into
-      * the checkpoint, so it holds for the query's lifetime). A 5 s
-      * trigger's batch is small BY CONSTRUCTION, so per-trigger cost is
-      * dominated by fixed per-partition work — a state-store
-      * (RocksDB) load+commit per partition per trigger — not by data
-      * volume; 32+ partitions for a ~20k-row trigger is nearly all
-      * overhead. Default 4 suits single-node (measured: the six-query
-      * concurrent topology pays 6×partitions state-store commits per
-      * trigger wave, and 8→4 moved aggregate throughput above the
-      * single-pipeline number); on a real cluster size it to trigger
-      * volume (rows per trigger / ~more than 100k), not to the
-      * batch-analytics default. `None` inherits the session value.
-      */
-    statePartitions: Option[Int] = Some(4)) {
+    loopTtlMs: Long = LoopDedupTws.ttlMsDefault) {
 
   private val codeDim = CodeMapping.dim(spark)
 
@@ -84,30 +63,14 @@ final class SyncPipeline(
       checkpoint: String): StreamingQuery = {
     val tx = transformed(source, mapping, direction)
       .withWatermark("event_ts", watermarkDelay)
-    // transformWithState requires the RocksDB provider; set it once at
-    // query start (it serves every stateful operator equally well).
-    // Changelog checkpointing makes the per-trigger state commit write
-    // the delta (the batch's changed keys), not a full RocksDB
-    // snapshot — the same O(batch)-not-O(state) argument as the
-    // snapshot store's delta commits, and the single biggest fixed
-    // cost on a 5 s cadence.
-    if (useTws) {
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-    }
+    LoopDedupTws.configureSession(spark)
     // only ever LOWER the session value: "size state partitions to
     // trigger volume" must not widen a caller who already sized down
-    statePartitions.foreach { n =>
-      val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      if (n < cur) spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    }
-    val deduped =
-      if (useTws) LoopDedupTws(tx, loopWindowMs, loopTtlMs)
-      else LoopDedup(tx, loopWindowMs, loopTtlMs)
+    val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    if (SyncPipeline.shufflePartitions < cur)
+      spark.conf.set("spark.sql.shuffle.partitions",
+        SyncPipeline.shufflePartitions.toString)
+    val deduped = LoopDedupTws(tx, ttlMs = loopTtlMs)
 
     deduped.writeStream
       .outputMode("append")
@@ -274,4 +237,22 @@ final class SyncPipeline(
         logTime.toLocalDateTime.toLocalDate)
     } finally cached.unpersist()
   }
+}
+
+object SyncPipeline {
+
+  /** Shuffle/state partition count for the streaming query, set on the
+    * session at [[SyncPipeline.start]] (the first micro-batch bakes it
+    * into the checkpoint, so it holds for the query's lifetime). A 5 s
+    * trigger's batch is small BY CONSTRUCTION, so per-trigger cost is
+    * dominated by fixed per-partition work — a state-store (RocksDB)
+    * load+commit per partition per trigger — not by data volume; 32+
+    * partitions for a ~20k-row trigger is nearly all overhead. 4 suits
+    * single-node (measured: the six-query concurrent topology pays
+    * 6×partitions state-store commits per trigger wave, and 8→4 moved
+    * aggregate throughput above the single-pipeline number); on a real
+    * cluster size it to trigger volume (rows per trigger / ~more than
+    * 100k), not to the batch-analytics default.
+    */
+  private val shufflePartitions = 4
 }

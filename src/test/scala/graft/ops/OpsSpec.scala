@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class OpsSpec extends SparkSpec {
@@ -13,6 +14,26 @@ class OpsSpec extends SparkSpec {
     (4L, "der schnelle braune fuchs und die katze ist da", "de", "s1"),
     (5L, "completely unrelated words about databases engines", "xx", "s2"))
     .toDF("doc_id", "text", "lang", "source")
+
+  /** Clustered embedding corpus: clusters of 4 mutually-near-dup unit
+    * vectors (within-cluster cosine ≈ 0.994 ≥ 0.9; the shared base
+    * direction is zero-centered uniform per cluster, so cross-cluster
+    * cosine concentrates near 0 — |cos| ≲ 3/√64 — and never crosses
+    * the threshold), true pair count 1.5n, exactly linear in n.
+    */
+  private def embCorpus(n: Long): DataFrame =
+    spark.range(n)
+      .selectExpr("id AS vec_id",
+        "transform(sequence(0, 63), j -> pmod(hash(id div 4, j), 1000) / 1000.0 - 0.5 " +
+          "+ CASE WHEN j = (id % 4) * 7 THEN 0.05 * (1 + id % 4) ELSE 0.0 END) AS e0")
+      // UNIT-normalize: the engine's cosine is the raw dot product
+      // (embeddings-table vectors are unit length), so an unnormalized
+      // synthetic corpus would put every within-block dot at ||v||² ≈
+      // 5.3 ≫ any threshold and measure the wrong semantics
+      .selectExpr("vec_id", "e0",
+        "sqrt(aggregate(e0, cast(0 as double), (a, y) -> a + y * y)) AS n0")
+      .selectExpr("vec_id",
+        "transform(e0, x -> cast(x / n0 as float)) AS embedding")
 
   test("exact dedup keeps min id per content hash") {
     val kept = Dedup.exactDedup(docs, "doc_id", "text")
@@ -385,7 +406,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("hierarchical assignment: deterministic, schema-equal, blocking recall within 1.25x of flat") {
-    val vecs = graft.tools.ScaleProbe.embCorpus(spark, 2000).localCheckpoint(true)
+    val vecs = embCorpus(2000).localCheckpoint(true)
     val cents = Similarity.ivfCentroids(vecs, 40, refine = 1).localCheckpoint(true)
     val flat = Similarity.assignToCentroidsWithSim(vecs, cents, "vec_id", "embedding")
       .select("vec_id", "cent_id").collect()

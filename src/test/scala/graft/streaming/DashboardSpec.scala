@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** S8: the five inspection endpoints run over a seeded store and
@@ -58,6 +57,12 @@ class DashboardSpec extends SparkSpec {
     assert(times.zip(times.tail).forall { case (a, b) => a >= b })
     val member = Dashboard.syncLog(spark, Some("member")).collect()
     assert(member.nonEmpty && member.forall(_.getAs[String]("table_name") == "TB_MEMBER"))
+    // the filter is data, not SQL: a quote neither breaks the parse nor
+    // rewrites the predicate into one that matches every row
+    for (quoted <- Seq("o'brien", "x' OR '1'='1")) {
+      assert(Dashboard.syncLog(spark, Some(quoted)).collect().isEmpty, quoted)
+      assert(Dashboard.stats(spark, Some(quoted)).collect().isEmpty, quoted)
+    }
 
     // 5. stats: status breakdown (60 rows: every 5th LOOP_BLOCKED)
     val stats = Dashboard.stats(spark).collect()
@@ -68,7 +73,9 @@ class DashboardSpec extends SparkSpec {
     assert(statsF.values.sum == 20L)
 
     // the pages plan as TakeOrderedAndProject (bounded top-K, no full sort)
-    val plan = Dashboard.syncLog(spark).queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"))
+    for (filter <- Seq(None, Some("member"))) {
+      val plan = Dashboard.syncLog(spark, filter).queryExecution.executedPlan.toString
+      assert(plan.contains("TakeOrderedAndProject"), filter)
+    }
   }
 }

@@ -77,8 +77,7 @@ class StreamingSpec extends SparkSpec {
   test("loop window expires: same hash after 5 minutes applies again") {
     val dir = Files.createTempDirectory("graft-stream2").toString
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pipeline = new SyncPipeline(spark, store, trigger = Trigger.ProcessingTime("0 seconds"),
-      useTws = false) // keeps the fMGWS variant covered alongside the TWS default
+    val pipeline = new SyncPipeline(spark, store, trigger = Trigger.ProcessingTime("0 seconds"))
     val mem = MemoryStream[String](spark)
     val source = mem.toDF()
       .withColumn("topic", lit("asis.ASIS_USER.BOOK_INFO"))
@@ -87,11 +86,16 @@ class StreamingSpec extends SparkSpec {
 
     mem.addData(envelope("c", 7, "x", t0))
     q.processAllAvailable()
-    // 6 minutes later: outside the 5-min loop window ⇒ applies (upsert)
+    // 4 minutes later: inside the window ⇒ blocked, and a suppressed
+    // echo does NOT record its hash (the window stays anchored at t0)
+    mem.addData(envelope("c", 7, "x", t0 + 240000))
+    q.processAllAvailable()
+    // 6 minutes after t0 (2 after the echo): outside t0's 5-min window
+    // ⇒ applies (upsert); blocked if the echo had refreshed the window
     mem.addData(envelope("c", 7, "x", t0 + 360000))
     q.processAllAvailable()
     q.stop()
-    assert(store.audit().filter($"status" === "LOOP_BLOCKED").count() == 0)
+    assert(store.audit().filter($"status" === "LOOP_BLOCKED").count() == 1)
     assert(store.audit().filter($"status" === "SUCCESS").count() == 2)
   }
 

@@ -2,14 +2,12 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.cdc.{Direction, Registry}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
-/** The transformWithState dedup (the pipeline default) drives the same
-  * pipeline and blocks the same echoes (RocksDB state store provider).
-  * Uses AvailableNow restarts over a file source so every step also
-  * proves the keyed state reloads from the checkpoint.
+/** The transformWithState loop dedup across query restarts (RocksDB
+  * state store provider): AvailableNow restarts over a file source, so
+  * every step also proves the keyed state reloads from the checkpoint.
   */
 class TwsDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -21,8 +19,7 @@ class TwsDedupSpec extends SparkSpec {
       val dir = Files.createTempDirectory("graft-tws").toString
       val in = new java.io.File(s"$dir/in"); in.mkdirs()
       val store = new SnapshotStore(spark, s"$dir/store")
-      val pipeline = new SyncPipeline(spark, store,
-        trigger = Trigger.AvailableNow(), useTws = true)
+      val pipeline = new SyncPipeline(spark, store, trigger = Trigger.AvailableNow())
       def run(): Unit = {
         val q = pipeline.start(
           StreamSources.jsonLineFiles(spark, in.toString, "asis.ASIS_USER.BOOK_INFO"),
@@ -51,13 +48,13 @@ class TwsDedupSpec extends SparkSpec {
     }
   }
 
-  test("TTL parity (ST3): watermark past the TTL evicts state, echo applies again") {
+  test("TTL eviction (ST3): watermark past the TTL evicts state, echo applies again") {
     try {
       val dir = Files.createTempDirectory("graft-tws-ttl").toString
       val in = new java.io.File(s"$dir/in"); in.mkdirs()
       val store = new SnapshotStore(spark, s"$dir/store")
-      // short event-time TTL, zero watermark delay: the same eviction
-      // contract as the fMGWS variant's event-time timeout
+      // short event-time TTL, zero watermark delay: the per-key timer
+      // fires once the watermark passes last-applied + TTL
       val pipeline = new SyncPipeline(spark, store,
         trigger = Trigger.AvailableNow(), watermarkDelay = "0 seconds",
         loopTtlMs = 2000)
