@@ -24,10 +24,10 @@ object StreamBench {
     */
   def twsThroughput(spark: SparkSession): (Double, Long) = {
     import spark.implicits._
-    // mirror SyncPipeline.start's production tuning (RocksDB +
-    // changelog checkpointing + trigger-volume-sized partitions) so
-    // sync/tws reads as sink overhead, not config skew; nothing may
-    // leak into the caller's session
+    // mirror the sync query's production tuning (RocksDB + changelog
+    // checkpointing + trigger-volume-sized partitions) so sync/tws
+    // reads as sink overhead, not config skew; nothing may leak into
+    // the caller's session
     val restore = pinStreamingConf(spark)
     val ckpt = Files.createTempDirectory("graft-bench-tws").toFile
     val input = MemoryStream[(String, java.sql.Timestamp)](spark)
@@ -66,20 +66,18 @@ object StreamBench {
     }
   }
 
-  /** Apply the streaming-side session tuning ([[graft.streaming.SyncPipeline.start]]
-    * sets the same three), returning a thunk that restores the
-    * caller's values.
+  /** Apply the sync query's session tuning (the settings
+    * [[graft.streaming.LoopDedupTws.configureSession]] owns plus the
+    * [[graft.streaming.MultiplexedSyncPipeline]] width), returning a
+    * thunk that restores the caller's values.
     */
   private def pinStreamingConf(spark: SparkSession): () => Unit = {
-    val keys = Seq(
-      "spark.sql.streaming.stateStore.providerClass",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "spark.sql.shuffle.partitions")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0),
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(keys(1), "true")
-    spark.conf.set(keys(2), "4")
+    val width = "spark.sql.shuffle.partitions"
+    val prev = (graft.streaming.LoopDedupTws.sessionConf.map(_._1) :+ width)
+      .map(k => k -> spark.conf.getOption(k))
+    graft.streaming.LoopDedupTws.configureSession(spark)
+    spark.conf.set(width,
+      graft.streaming.MultiplexedSyncPipeline.shufflePartitions.toString)
     () => prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
@@ -111,17 +109,17 @@ object StreamBench {
     * compaction (the amortized cost a long-running pipeline pays).
     */
   def syncThroughput(spark: SparkSession): Double = {
-    // SyncPipeline.start re-sets the same conf pinStreamingConf does;
+    // the sync query re-sets the same conf pinStreamingConf does;
     // pin-and-restore here so nothing leaks into the caller's session
     val restore = pinStreamingConf(spark)
     val dir = Files.createTempDirectory("graft-bench-sync").toFile
     val store = new graft.streaming.SnapshotStore(spark, s"$dir/store")
-    val pipeline = new graft.streaming.SyncPipeline(spark, store,
+    val pipeline = new graft.streaming.MultiplexedSyncPipeline(spark, store,
       trigger = Trigger.ProcessingTime("0 seconds"))
     val mem = MemoryStream[String](spark)(spark.sqlContext.implicits.newStringEncoder)
     val source = mem.toDF().withColumn("topic", lit("asis.ASIS_USER.BOOK_INFO"))
-    val q = pipeline.start(source, graft.cdc.Registry.book,
-      graft.cdc.Direction.AsisToTobe, s"$dir/ckpt")
+    val q = pipeline.start(source,
+      Seq((graft.cdc.Registry.book, graft.cdc.Direction.AsisToTobe)), s"$dir/ckpt")
     try {
       val t0 = 1768284000000L
       val perBatch = 20000
@@ -168,8 +166,9 @@ object StreamBench {
     case other => throw new IllegalArgumentException(other.toString)
   }
 
-  /** The production topology under load: ALL six (mapping, direction)
-    * queries running simultaneously against ONE snapshot store — the
+  /** The one-pair-per-query deployment under load: ALL six
+    * (mapping, direction) pairs as six sync queries running
+    * simultaneously against ONE snapshot store — the
     * number that makes the shared audit path's serialization cost (and
     * any cross-query driver contention) visible, where the single-
     * pipeline probe can't. Reports AGGREGATE events/s across the six.
@@ -178,7 +177,7 @@ object StreamBench {
     val restore = pinStreamingConf(spark)
     val dir = Files.createTempDirectory("graft-bench-conc").toFile
     val store = new graft.streaming.SnapshotStore(spark, s"$dir/store")
-    val pipeline = new graft.streaming.SyncPipeline(spark, store,
+    val pipeline = new graft.streaming.MultiplexedSyncPipeline(spark, store,
       trigger = Trigger.ProcessingTime("0 seconds"))
     val pairs = graft.cdc.Registry.byTopic.values.toSeq
       .sortBy(p => p._1.entity + p._2)
@@ -189,7 +188,7 @@ object StreamBench {
         if (a2t) ("ASIS_USER", m.asis.table) else ("TOBE_USER", m.tobe.table)
       val src = mem.toDF()
         .withColumn("topic", lit(graft.cdc.Registry.topicFor(d, m)))
-      val q = pipeline.start(src, m, d, s"$dir/ckpt/${m.entity}-$d")
+      val q = pipeline.start(src, Seq((m, d)), s"$dir/ckpt/${m.entity}-$d")
       (mem, q, m, a2t, schema, table)
     }
     try {

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 
 /** A4's newest-N ring buffer as a typed Aggregator (SURVEY.md §2.10) —
   * the reference keeps bounded newest-first lists in memory

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.cdc.{Direction, Registry, TableMapping}
 
 /** Initial-snapshot bootstrap — the reference's snapshot-mode lifecycle
@@ -11,7 +10,8 @@ import graft.cdc.{Direction, Registry, TableMapping}
   * pre-existing source table into the store THROUGH THE SAME
   * parse → transform → apply path the stream uses (no side door, so
   * casts, code-maps and defaults are byte-identical to streamed rows),
-  * then hand over to the catch-up stream.
+  * then hand over to the catch-up stream
+  * ([[MultiplexedSyncPipeline.start]]).
   *
   * The handover needs no offset coordination: the stream may replay
   * events from BEFORE the snapshot cut, because the apply is
@@ -53,17 +53,5 @@ object Bootstrap {
     val batch = pipeline.transformed(envelopes, mapping, direction)
       .withColumn("loop_blocked", lit(false))
     pipeline.applyMicroBatch(batch, mapping, direction)
-  }
-
-  /** Bulk-load, then start the catch-up stream (one call for the whole
-    * lifecycle). `source` is the live (topic, value) stream positioned
-    * at or before the snapshot cut.
-    */
-  def bootstrap(
-      pipeline: SyncPipeline, mapping: TableMapping,
-      direction: Direction.Value, images: DataFrame, tsMs: Long,
-      source: DataFrame, checkpoint: String): StreamingQuery = {
-    initialLoad(pipeline, mapping, direction, images, tsMs)
-    pipeline.start(source, mapping, direction, checkpoint)
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.streaming.CurationStream.SemanticTier
 
 /** The FULL streaming curation ladder in one exactly-once stream — the
   * end-to-end topology a production ingest actually runs, composing

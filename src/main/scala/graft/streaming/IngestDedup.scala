@@ -169,7 +169,7 @@ object IngestDedup {
     * (build it first with [[graft.sources.DedupIndex.build]]).
     *
     * `shufflePartitions` sizes the session's shuffle width to the
-    * TRIGGER volume, the same argument as [[SyncPipeline]]'s
+    * TRIGGER volume, the same argument as [[MultiplexedSyncPipeline]]'s
     * shuffle-partition constant: an ingest trigger is small by construction, so
     * per-trigger cost is fixed per-partition work (task launch, file
     * commit) — 32 batch-analytics partitions for a ~1k-doc trigger is

@@ -46,14 +46,13 @@ object LoopDedupTws {
     * argument as the snapshot store's delta commits, and the single
     * biggest fixed cost on a 5 s cadence.
     */
-  def configureSession(spark: SparkSession): Unit = {
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-  }
+  def configureSession(spark: SparkSession): Unit =
+    sessionConf.foreach { case (k, v) => spark.conf.set(k, v) }
+
+  private[graft] val sessionConf = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   private class Processor(schema: StructType, windowMs: Long, ttlMs: Long)
       extends StatefulProcessor[String, Row, Row] {

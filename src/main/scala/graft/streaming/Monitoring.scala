@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Monitoring surface (SURVEY.md §2.5 A1–A4) over the audit stream —

@@ -1283,10 +1283,6 @@ final class SnapshotStore(
       .exists(d => fs.exists(new Path(d, s"$key.parquet")))
   }
 
-  /** Drop a staged epoch that will never publish (empty batch). */
-  def discardEpochAudit(key: String): Unit =
-    deleteIfExists(epochStagingDir(key))
-
   def audit(): DataFrame = {
     val p = new Path(s"$basePath/_audit")
     // an all-blocked-free EMPTY micro-batch appends zero rows, leaving a

@@ -2,13 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Streaming source surface (SURVEY.md §2.1 S1/S5).
   *
   * Every source is normalized to the kafka shape the pipeline consumes:
-  * `topic: String, value: String` — so `SyncPipeline.start` is
-  * source-agnostic (MemoryStream in tests, Kafka in production, files
+  * `topic: String, value: String` — so `MultiplexedSyncPipeline.start`
+  * is source-agnostic (MemoryStream in tests, Kafka in production, files
   * for replay).
   */
 object StreamSources {

@@ -2,34 +2,22 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc._
 
-/** End-to-end CDC sync pipeline (SURVEY.md §3.1 restated Spark-first):
-  *
-  * Kafka-shaped source (`topic`, `value`) → Debezium envelope parse →
-  * config-driven transform → post-transform loop hash → stateful
-  * loop-dedup (5 min window / 10 min TTL, suppressed events audited) →
-  * `foreachBatch`: ordered apply with upsert conversion +
-  * TARGET_NOT_FOUND + audit append, on a 5-second trigger
-  * (`Trigger.ProcessingTime`, mirroring the reference's DBMS_SCHEDULER
-  * cadence, `asis…04:396`).
-  *
-  * One streaming query per (mapping, direction) — the reference runs one
-  * Kafka listener per topic (`CdcKafkaConsumer.java:60-107`); per-query
-  * isolation keeps per-table schemas static for Catalyst.
+/** The per-table stages of the CDC sync (SURVEY.md §3.1 restated
+  * Spark-first): Kafka-shaped source (`topic`, `value`) → Debezium
+  * envelope parse → config-driven transform → post-transform loop hash
+  * ([[transformed]]), and the ordered apply with upsert conversion +
+  * TARGET_NOT_FOUND + audit append ([[applyMicroBatch]]). The streaming
+  * query that joins them through the stateful loop-dedup — one pair or
+  * all six — is [[MultiplexedSyncPipeline.start]].
   *
   * Scale notes: parse/transform are narrow and codegen'd; the only wide
   * stages are the dedup state shuffle (by change_hash) and the apply's
   * pk-hash join+window — both partition by key and scale horizontally.
   * The snapshot store is the local stand-in for a MERGE sink.
   */
-final class SyncPipeline(
-    spark: SparkSession,
-    store: SnapshotStore,
-    trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-    watermarkDelay: String = "10 minutes",
-    loopTtlMs: Long = LoopDedupTws.ttlMsDefault) {
+final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
 
   private val codeDim = CodeMapping.dim(spark)
 
@@ -41,10 +29,7 @@ final class SyncPipeline(
     val topic = Registry.topicFor(direction, mapping)
     val side = mapping.sideFor(direction)
     val target = mapping.targetFor(direction)
-    val routed =
-      if (source.columns.contains("topic")) source.filter(col("topic") === topic)
-      else source
-    val parsed = Envelope.parse(routed, side)
+    val parsed = Envelope.parse(source.filter(col("topic") === topic), side)
     val tx = Transform(parsed, mapping, direction, codeDim)
     val targetCols = mapping.specsFor(direction).map(_._1)
     val valueCols = targetCols.filterNot(_ == target.pk)
@@ -53,33 +38,6 @@ final class SyncPipeline(
           valueCols.map(col)))
       .withColumn("event_ts", col("source_ts"))
       .withColumn("seq", unix_micros(col("source_ts")))
-  }
-
-  /** Start the streaming query for one mapping+direction. */
-  def start(
-      source: DataFrame,
-      mapping: TableMapping,
-      direction: Direction.Value,
-      checkpoint: String): StreamingQuery = {
-    val tx = transformed(source, mapping, direction)
-      .withWatermark("event_ts", watermarkDelay)
-    LoopDedupTws.configureSession(spark)
-    // only ever LOWER the session value: "size state partitions to
-    // trigger volume" must not widen a caller who already sized down
-    val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    if (SyncPipeline.shufflePartitions < cur)
-      spark.conf.set("spark.sql.shuffle.partitions",
-        SyncPipeline.shufflePartitions.toString)
-    val deduped = LoopDedupTws(tx, ttlMs = loopTtlMs)
-
-    deduped.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyMicroBatch(batch, mapping, direction, id); ()
-      }
-      .start()
   }
 
   /** One micro-batch: stage the live events as a DELTA (O(|batch|)
@@ -137,7 +95,6 @@ final class SyncPipeline(
     try {
       val blocked = cached.filter(col("loop_blocked"))
       val live = cached.filter(!col("loop_blocked"))
-      val liveSel = live.select((Seq("seq", "operation") ++ targetCols).map(col): _*)
 
       // Stage (write, don't yet commit) the delta. This ONE job is the
       // whole front half of the trigger: it populates the batch cache
@@ -150,31 +107,29 @@ final class SyncPipeline(
       // An empty batch costs one zero-row write (deltaWriteParts=1, a
       // single empty reduce task, no files) which is aborted on the
       // spot; a separate count() probe would cost the same state-store
-      // pass and one more driver action on EVERY data batch.
-      var staged = -1
-      var (events, liveCount, lo, hi) = (0L, 0L, null: Any, null: Any)
-      if (!deltaAlready) {
-        val obsAll = org.apache.spark.sql.Observation()
-        val obsD = org.apache.spark.sql.Observation()
-        val probedSel = cached.observe(obsAll, count(lit(1)).as("events"))
-          .filter(!col("loop_blocked"))
-          .select((Seq("seq", "operation") ++ targetCols).map(col): _*)
-        staged = timed("stageDelta")(store.stageDelta(target.table,
-          probedSel.observe(obsD, count(lit(1)).as("n"),
-            min(col(target.pk)).as("lo"), max(col(target.pk)).as("hi")),
+      // pass and one more driver action on EVERY data batch. A replay
+      // whose delta already committed drains the same observed frame
+      // into a noop sink instead of staging it.
+      val obsAll = org.apache.spark.sql.Observation()
+      val obsD = org.apache.spark.sql.Observation()
+      val probed = cached.observe(obsAll, count(lit(1)).as("events"))
+        .filter(!col("loop_blocked"))
+        .select((Seq("seq", "operation") ++ targetCols).map(col): _*)
+        .observe(obsD, count(lit(1)).as("n"),
+          min(col(target.pk)).as("lo"), max(col(target.pk)).as("hi"))
+      val staged =
+        if (deltaAlready) {
+          timed("probe")(probed.write.format("noop").mode("overwrite").save())
+          -1
+        } else timed("stageDelta")(store.stageDelta(target.table, probed,
           target.pk, "seq", valueCols,
           meta = if (batchId >= 0) Some(batchId.toString) else None))
-        events = obsAll.get("events").asInstanceOf[Long]
-        if (events == 0L) { store.abortDelta(target.table, staged); return }
-        val m = obsD.get
-        liveCount = m("n").asInstanceOf[Long]; lo = m("lo"); hi = m("hi")
-      } else { // rare replay path: probe + bounds via explicit actions
-        events = timed("probe")(cached.count())
-        if (events == 0L) return
-        val r = liveSel.agg(count(lit(1)),
-          min(col(target.pk)), max(col(target.pk))).head()
-        liveCount = r.getLong(0); lo = r.get(1); hi = r.get(2)
+      if (obsAll.get("events").asInstanceOf[Long] == 0L) {
+        if (staged >= 0) store.abortDelta(target.table, staged)
+        return
       }
+      val m = obsD.get
+      val (liveCount, lo, hi) = (m("n").asInstanceOf[Long], m("lo"), m("hi"))
       // audit statuses (TARGET_NOT_FOUND / upsert conversion) are
       // defined against the table as of BEFORE this batch: the staged
       // delta is invisible until finalize, and the replay path pins
@@ -237,22 +192,4 @@ final class SyncPipeline(
         logTime.toLocalDateTime.toLocalDate)
     } finally cached.unpersist()
   }
-}
-
-object SyncPipeline {
-
-  /** Shuffle/state partition count for the streaming query, set on the
-    * session at [[SyncPipeline.start]] (the first micro-batch bakes it
-    * into the checkpoint, so it holds for the query's lifetime). A 5 s
-    * trigger's batch is small BY CONSTRUCTION, so per-trigger cost is
-    * dominated by fixed per-partition work — a state-store (RocksDB)
-    * load+commit per partition per trigger — not by data volume; 32+
-    * partitions for a ~20k-row trigger is nearly all overhead. 4 suits
-    * single-node (measured: the six-query concurrent topology pays
-    * 6×partitions state-store commits per trigger wave, and 8→4 moved
-    * aggregate throughput above the single-pipeline number); on a real
-    * cluster size it to trigger volume (rows per trigger / ~more than
-    * 100k), not to the batch-analytics default.
-    */
-  private val shufflePartitions = 4
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Bloom-pruned join: the pruning pass keeps a SUPERSET of the true
   * matches (no false negatives — soundness), drops the overwhelming

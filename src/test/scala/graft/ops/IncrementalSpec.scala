@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The two algebraic properties incremental maintenance rests on:
   * states merge associatively, and ±1 multiplicities retract — a CDC

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Plan-shape assertions: the scale claims for the temporal operators
   * are properties of the physical plan, so pin them in tests — a

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class BucketingSpec extends SparkSpec {
 

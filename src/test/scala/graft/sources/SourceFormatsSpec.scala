@@ -13,7 +13,6 @@ import java.nio.file.Files
   * connector module, same class of gap as the kafka artifact.)
   */
 class SourceFormatsSpec extends SparkSpec {
-  import spark.implicits._
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.cdc.{Direction, Registry}
-import graft.streaming.{SnapshotStore, StreamSources, SyncPipeline}
+import graft.streaming.{MultiplexedSyncPipeline, SnapshotStore, StreamSources}
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
@@ -32,9 +32,9 @@ class SurfaceSpec extends SparkSpec {
     Files.write(new java.io.File(in, "replay.jsonl").toPath, env.getBytes)
 
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pipeline = new SyncPipeline(spark, store, trigger = Trigger.AvailableNow())
+    val pipeline = new MultiplexedSyncPipeline(spark, store, trigger = Trigger.AvailableNow())
     val source = StreamSources.jsonLineFiles(spark, in.toString, "asis.ASIS_USER.BOOK_INFO")
-    val q = pipeline.start(source, Registry.book, Direction.AsisToTobe, s"$dir/ckpt")
+    val q = pipeline.start(source, Seq((Registry.book, Direction.AsisToTobe)), s"$dir/ckpt")
     q.awaitTermination(60000)
 
     val snap = store.snapshot("TB_BOOK", null)

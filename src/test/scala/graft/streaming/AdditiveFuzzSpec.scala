@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import java.nio.file.Files
 

@@ -23,14 +23,15 @@ class BidirectionalLoopSpec extends SparkSpec {
   test("C-13: three-hop echo is suppressed by the loop window") {
     val dir = Files.createTempDirectory("graft-bidi").toString
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pipeline = new SyncPipeline(spark, store, trigger = Trigger.ProcessingTime("0 seconds"))
+    val pipeline = new MultiplexedSyncPipeline(spark, store,
+      trigger = Trigger.ProcessingTime("0 seconds"))
 
     val a2tMem = MemoryStream[String](spark)
     val t2aMem = MemoryStream[String](spark)
     val a2t = pipeline.start(a2tMem.toDF().withColumn("topic", lit("asis.ASIS_USER.BOOK_INFO")),
-      Registry.book, Direction.AsisToTobe, s"$dir/ckpt-a2t")
+      Seq((Registry.book, Direction.AsisToTobe)), s"$dir/ckpt-a2t")
     val t2a = pipeline.start(t2aMem.toDF().withColumn("topic", lit("tobe.TOBE_USER.TB_BOOK")),
-      Registry.book, Direction.TobeToAsis, s"$dir/ckpt-t2a")
+      Seq((Registry.book, Direction.TobeToAsis)), s"$dir/ckpt-t2a")
     def drain(): Unit = { a2t.processAllAvailable(); t2a.processAllAvailable() }
 
     val t0 = 1768284000000L

@@ -37,14 +37,16 @@ class BootstrapSpec extends SparkSpec {
   test("initial load applies through the standard path; stream overlap converges") {
     val dir = Files.createTempDirectory("graft-bootstrap").toString
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pipeline = new SyncPipeline(spark, store,
-      trigger = Trigger.ProcessingTime("0 seconds"))
     val mem = MemoryStream[String](spark)(spark.sqlContext.implicits.newStringEncoder)
     val source = mem.toDF().withColumn("topic", lit("asis.ASIS_USER.BOOK_INFO"))
 
-    // snapshot cut at t0: three pre-existing books
-    val q = Bootstrap.bootstrap(pipeline, Registry.book, Direction.AsisToTobe,
-      images((1, "one"), (2, "two"), (3, "three")), t0, source, s"$dir/ckpt")
+    // snapshot cut at t0: three pre-existing books, then the catch-up
+    // stream
+    Bootstrap.initialLoad(new SyncPipeline(spark, store), Registry.book,
+      Direction.AsisToTobe, images((1, "one"), (2, "two"), (3, "three")), t0)
+    val q = new MultiplexedSyncPipeline(spark, store,
+      trigger = Trigger.ProcessingTime("0 seconds"))
+      .start(source, Seq((Registry.book, Direction.AsisToTobe)), s"$dir/ckpt")
     try {
       val snap = store.snapshot("TB_BOOK", null)
       assert(snap.count() == 3)

@@ -48,7 +48,7 @@ class ConcurrentPipelineSpec extends SparkSpec {
   test("all 4 mappings x both directions run concurrently against one store") {
     val dir = Files.createTempDirectory("graft-concurrent").toString
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pipeline = new SyncPipeline(spark, store, trigger = Trigger.AvailableNow())
+    val pipeline = new MultiplexedSyncPipeline(spark, store, trigger = Trigger.AvailableNow())
 
     // the six live (mapping, direction) pairs, straight from the registry
     val pairs: Seq[(TableMapping, Direction.Value)] =
@@ -71,7 +71,7 @@ class ConcurrentPipelineSpec extends SparkSpec {
       val qs = pairs.filter(p => only(slug(p._1, p._2))).map { case (m, d) =>
         pipeline.start(
           StreamSources.jsonLineFiles(spark, inDir(m, d), Registry.topicFor(d, m)),
-          m, d, s"$dir/ckpt/${slug(m, d)}")
+          Seq((m, d)), s"$dir/ckpt/${slug(m, d)}")
       }
       qs.foreach(_.awaitTermination(120000))
     }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.sources.DedupIndex
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files

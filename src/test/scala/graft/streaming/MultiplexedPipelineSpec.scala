@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SparkSpec
 import graft.cdc.{Direction, Registry, TableMapping}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
@@ -23,8 +22,8 @@ class MultiplexedPipelineSpec extends SparkSpec {
     s"""{"payload":{"op":"$op","before":$before,"after":$after,""" +
       s""""source":{"schema":"$schema","table":"$table"},"ts_ms":$tsMs}}"""
   }
-  private def bookAsis(id: Int, title: String) =
-    s"""{"BOOK_ID":"$id","BOOK_TITLE":"$title","AUTHOR":"a","CATEGORY":"01","STATUS":"Y","REG_DATE":$t0,"MOD_DATE":null}"""
+  private def bookAsis(id: Int, title: String, regDate: Long = t0) =
+    s"""{"BOOK_ID":"$id","BOOK_TITLE":"$title","AUTHOR":"a","CATEGORY":"01","STATUS":"Y","REG_DATE":$regDate,"MOD_DATE":null}"""
   private def bookTobe(id: Int, title: String) =
     s"""{"BOOK_ID":"$id","TITLE":"$title","AUTHOR_NAME":"a","CATEGORY_CD":"SCI","IS_ACTIVE":"1","CREATED_AT":$t0,"UPDATED_AT":null,"CREATED_BY":"SYNC","UPDATED_BY":"SYNC"}"""
   private def memberAsis(id: Int, name: String) =
@@ -74,7 +73,7 @@ class MultiplexedPipelineSpec extends SparkSpec {
       assert(store.snapshot("TB_LEGACY_CODE", null).head()
         .getAs[String]("CODE_NAME") == "code-one")
       assert(store.snapshot("NEW_SERVICE_RECV", null).head().getAs[String]("USE_YN") == "Y")
-      // timestamp columns survive the payload JSON round-trip intact
+      // timestamp columns reach the target table intact
       assert(store.snapshot("TB_BOOK", null).head()
         .getAs[java.sql.Timestamp]("CREATED_AT").getTime == t0)
 
@@ -114,6 +113,17 @@ class MultiplexedPipelineSpec extends SparkSpec {
       assert(byTable(("ASIS_TO_TOBE", "TB_LEGACY_CODE")) == Seq("SUCCESS"))
       assert(byTable(("TOBE_TO_ASIS", "NEW_SERVICE_RECV")) == Seq("SUCCESS"))
       assert(audit.length == 9, s"no stray audit rows, got ${audit.toSeq}")
+
+      // ---- round 4: a Debezium MicroTimestamp keeps its microseconds
+      // on the way from the union to the apply
+      mem.addData(
+        topic(Registry.book, Direction.AsisToTobe) ->
+          env("ASIS_USER", "BOOK_INFO", "c",
+            bookAsis(3, "b-three", regDate = 1768284000123456L), t0 + 720000))
+      q.processAllAvailable()
+      val created = store.snapshot("TB_BOOK", null).filter($"BOOK_ID" === 3).head()
+        .getAs[java.sql.Timestamp]("CREATED_AT")
+      assert(created.getNanos == 123456000, s"CREATED_AT lost precision: $created")
     } finally q.stop()
   }
 }

@@ -40,6 +40,39 @@ class PerTriggerJobSpec extends SparkSpec {
     (new SyncPipeline(spark, store), store)
   }
 
+  /** Root SQL executions (driver ACTIONS) that `f` runs. Counts
+    * actions, not scheduler jobs: AQE materializes each exchange as its
+    * own job, so job count measures the plan's stage shape, not how
+    * many times the driver kicks off work.
+    */
+  private def actionsDuring(f: => Unit): Int = {
+    val actions = new AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case e: SparkListenerSQLExecutionStart
+          // AQE re-posts nested executions with a rootExecutionId
+          // pointing at the parent; count only the roots
+          if e.rootExecutionId.forall(_ == e.executionId) =>
+          actions.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      // the listener bus is async: wait until the count stops moving
+      var last = -1
+      var stable = 0
+      val deadline = System.currentTimeMillis() + 10000
+      while (stable < 3 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(200)
+        val now = actions.get()
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    actions.get()
+  }
+
   test("a non-compacting micro-batch runs exactly 2 actions, " +
     "even with deltas outstanding; a no-data batch runs 1") {
     val (pipeline, store) = fixture()
@@ -53,62 +86,19 @@ class PerTriggerJobSpec extends SparkSpec {
       batchOf(pipeline, (51 to 80).map(i => envelope("c", i, s"t$i", t0 + i))),
       Registry.book, Direction.AsisToTobe, batchId = 1L)
 
-    // count ACTIONS (SQL executions), not scheduler jobs: AQE
-    // materializes each exchange as its own job, so job count measures
-    // the plan's stage shape, not how many times the driver kicks off
-    // work. The old code ran 3 heavy actions (bounds head + audit
-    // append + delta write) and paid two empty WRITES per no-data
-    // batch; the contract now is delta stage (which IS the probe) +
-    // audit stage on data, the aborted empty stage only on no-data.
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case e: SparkListenerSQLExecutionStart
-          // AQE re-posts nested executions with a rootExecutionId
-          // pointing at the parent; count only the roots
-          if e.rootExecutionId.forall(_ == e.executionId) =>
-          jobs.incrementAndGet(); ()
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      pipeline.applyMicroBatch(
-        batchOf(pipeline,
-          (70 to 90).map(i => envelope("u", i, s"t$i-v2", t0 + 1000 + i))),
-        Registry.book, Direction.AsisToTobe, batchId = 2L)
-      // the listener bus is async: wait until the count stops moving
-      var last = -1
-      var stable = 0
-      val deadline = System.currentTimeMillis() + 10000
-      while (stable < 3 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(200)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-
-    assert(jobs.get() == 2,
+    val data = actionsDuring(pipeline.applyMicroBatch(
+      batchOf(pipeline,
+        (70 to 90).map(i => envelope("u", i, s"t$i-v2", t0 + 1000 + i))),
+      Registry.book, Direction.AsisToTobe, batchId = 2L))
+    assert(data == 2,
       s"per-trigger action budget is 2 (delta stage doubling as the " +
-        s"emptiness probe + audit stage), saw ${jobs.get()}")
+        s"emptiness probe + audit stage), saw $data")
     // a no-data batch short-circuits after the aborted empty stage
-    jobs.set(0)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      pipeline.applyMicroBatch(
-        batchOf(pipeline, Seq.empty[String]),
-        Registry.book, Direction.AsisToTobe, batchId = 3L)
-      var last = -1
-      var stable = 0
-      val deadline = System.currentTimeMillis() + 10000
-      while (stable < 3 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(200)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 1,
-      s"a no-data batch must cost only the aborted empty stage, saw ${jobs.get()}")
+    val empty = actionsDuring(pipeline.applyMicroBatch(
+      batchOf(pipeline, Seq.empty[String]),
+      Registry.book, Direction.AsisToTobe, batchId = 3L))
+    assert(empty == 1,
+      s"a no-data batch must cost only the aborted empty stage, saw $empty")
     // and the batch actually applied: 80 rows, 70-80 updated
     val snap = store.snapshot("TB_BOOK", null)
     assert(snap.count() == 80)
@@ -135,7 +125,10 @@ class PerTriggerJobSpec extends SparkSpec {
       finally s.close()
     }
     java.nio.file.Files.delete(auditFile)
-    pipeline.applyMicroBatch(b0, Registry.book, Direction.AsisToTobe, batchId = 0L)
+    val replay = actionsDuring(
+      pipeline.applyMicroBatch(b0, Registry.book, Direction.AsisToTobe, batchId = 0L))
+    assert(replay == 2,
+      s"the replay drains the observed frame once + stages the audit, saw $replay")
     assert(store.currentVersion("TB_BOOK") == v0,
       "replay after the delta committed must not write a second delta")
     assert(store.audit().count() == 20,

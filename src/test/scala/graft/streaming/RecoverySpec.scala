@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.cdc.{Direction, Registry}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
@@ -21,10 +20,10 @@ class RecoverySpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-recover").toString
     val in = new java.io.File(s"$dir/in"); in.mkdirs()
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pipeline = new SyncPipeline(spark, store, trigger = Trigger.AvailableNow())
+    val pipeline = new MultiplexedSyncPipeline(spark, store, trigger = Trigger.AvailableNow())
     def start() = pipeline.start(
       StreamSources.jsonLineFiles(spark, in.toString, "asis.ASIS_USER.BOOK_INFO"),
-      Registry.book, Direction.AsisToTobe, s"$dir/ckpt")
+      Seq((Registry.book, Direction.AsisToTobe)), s"$dir/ckpt")
 
     val t0 = 1768284000000L
     Files.write(new java.io.File(in, "f1.jsonl").toPath,

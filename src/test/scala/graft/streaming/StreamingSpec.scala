@@ -25,13 +25,13 @@ class StreamingSpec extends SparkSpec {
   test("end-to-end sync: insert, echo loop-block, update, delete, audit") {
     val dir = Files.createTempDirectory("graft-stream").toString
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pipeline = new SyncPipeline(spark, store, trigger = Trigger.ProcessingTime("0 seconds"))
+    val pipeline = new MultiplexedSyncPipeline(spark, store,
+      trigger = Trigger.ProcessingTime("0 seconds"))
 
     val mem = MemoryStream[String](spark)
-    val source = mem.toDF().withColumnRenamed("value", "value")
-      .withColumn("topic", lit("asis.ASIS_USER.BOOK_INFO"))
+    val source = mem.toDF().withColumn("topic", lit("asis.ASIS_USER.BOOK_INFO"))
 
-    val q = pipeline.start(source, Registry.book, Direction.AsisToTobe, s"$dir/ckpt")
+    val q = pipeline.start(source, Seq((Registry.book, Direction.AsisToTobe)), s"$dir/ckpt")
     val t0 = 1768284000000L // 2026-01-13
 
     // batch 1: insert
@@ -77,11 +77,12 @@ class StreamingSpec extends SparkSpec {
   test("loop window expires: same hash after 5 minutes applies again") {
     val dir = Files.createTempDirectory("graft-stream2").toString
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pipeline = new SyncPipeline(spark, store, trigger = Trigger.ProcessingTime("0 seconds"))
+    val pipeline = new MultiplexedSyncPipeline(spark, store,
+      trigger = Trigger.ProcessingTime("0 seconds"))
     val mem = MemoryStream[String](spark)
     val source = mem.toDF()
       .withColumn("topic", lit("asis.ASIS_USER.BOOK_INFO"))
-    val q = pipeline.start(source, Registry.book, Direction.AsisToTobe, s"$dir/ckpt")
+    val q = pipeline.start(source, Seq((Registry.book, Direction.AsisToTobe)), s"$dir/ckpt")
     val t0 = 1768284000000L
 
     mem.addData(envelope("c", 7, "x", t0))
@@ -102,14 +103,15 @@ class StreamingSpec extends SparkSpec {
   test("bidirectional routing: TOBE events go to the ASIS table") {
     val dir = Files.createTempDirectory("graft-stream3").toString
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pipeline = new SyncPipeline(spark, store, trigger = Trigger.ProcessingTime("0 seconds"))
+    val pipeline = new MultiplexedSyncPipeline(spark, store,
+      trigger = Trigger.ProcessingTime("0 seconds"))
     val tobeEnv =
       """{"payload":{"op":"c","before":null,
         |"after":{"BOOK_ID":"5","TITLE":"t5","AUTHOR_NAME":"an","CATEGORY_CD":"SCI","IS_ACTIVE":"1","CREATED_AT":1768284000000,"UPDATED_AT":null,"CREATED_BY":"app","UPDATED_BY":"app"},
         |"source":{"schema":"TOBE_USER","table":"TB_BOOK"},"ts_ms":1768284000000}}""".stripMargin.replaceAll("\n", "")
     val mem = MemoryStream[String](spark)
     val source = mem.toDF().withColumn("topic", lit("tobe.TOBE_USER.TB_BOOK"))
-    val q = pipeline.start(source, Registry.book, Direction.TobeToAsis, s"$dir/ckpt")
+    val q = pipeline.start(source, Seq((Registry.book, Direction.TobeToAsis)), s"$dir/ckpt")
     mem.addData(tobeEnv)
     q.processAllAvailable()
     q.stop()

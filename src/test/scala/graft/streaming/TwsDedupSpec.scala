@@ -19,11 +19,11 @@ class TwsDedupSpec extends SparkSpec {
       val dir = Files.createTempDirectory("graft-tws").toString
       val in = new java.io.File(s"$dir/in"); in.mkdirs()
       val store = new SnapshotStore(spark, s"$dir/store")
-      val pipeline = new SyncPipeline(spark, store, trigger = Trigger.AvailableNow())
+      val pipeline = new MultiplexedSyncPipeline(spark, store, trigger = Trigger.AvailableNow())
       def run(): Unit = {
         val q = pipeline.start(
           StreamSources.jsonLineFiles(spark, in.toString, "asis.ASIS_USER.BOOK_INFO"),
-          Registry.book, Direction.AsisToTobe, s"$dir/ckpt")
+          Seq((Registry.book, Direction.AsisToTobe)), s"$dir/ckpt")
         q.awaitTermination(120000); ()
       }
       val t0 = 1768284000000L
@@ -55,13 +55,13 @@ class TwsDedupSpec extends SparkSpec {
       val store = new SnapshotStore(spark, s"$dir/store")
       // short event-time TTL, zero watermark delay: the per-key timer
       // fires once the watermark passes last-applied + TTL
-      val pipeline = new SyncPipeline(spark, store,
+      val pipeline = new MultiplexedSyncPipeline(spark, store,
         trigger = Trigger.AvailableNow(), watermarkDelay = "0 seconds",
         loopTtlMs = 2000)
       def run(): Unit = {
         val q = pipeline.start(
           StreamSources.jsonLineFiles(spark, in.toString, "asis.ASIS_USER.BOOK_INFO"),
-          Registry.book, Direction.AsisToTobe, s"$dir/ckpt")
+          Seq((Registry.book, Direction.AsisToTobe)), s"$dir/ckpt")
         q.awaitTermination(120000); ()
       }
       val t0 = 1768284000000L
