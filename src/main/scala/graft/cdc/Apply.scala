@@ -49,7 +49,7 @@ object Apply {
       .join(inBase, Seq(pk), "left")
       .withColumn("__in_base", coalesce(col("__in_base"), lit(false)))
 
-    val audit = auditFrom(ch, pk, seqCol, auditPassthrough)
+    val audit = auditFrom(ch, Seq(pk), seqCol, auditPassthrough)
 
     // ---- target path: ONE hash aggregate, no sort. The key insight:
     // whenever a key finally exists, its LAST event necessarily applied
@@ -80,26 +80,31 @@ object Apply {
   /** Audit-only evaluation against a precomputed pk-membership set —
     * the existence state machine needs nothing but "was this pk present
     * at batch start", so callers that consume ONLY the audit (the
-    * streaming sink's per-trigger status frame) can feed a
+    * streaming sink's per-epoch status frame) can feed a
     * column-pruned membership read instead of a full base⊕delta
     * reconstruction (the O(|table|·allcols) read the r5 verdict
     * flagged). Produces exactly [[applyBatch]]'s audit frame.
     *
-    * @param existingPks one column (`pk`): the pks present at batch
-    *                    start (e.g. [[graft.streaming.SnapshotStore.existingPks]])
+    * @param existingPks the `keys` present at batch start, each once
+    *                    (e.g. [[graft.streaming.SnapshotStore.existingKeys]],
+    *                    a set by construction)
+    * @param keys        the state machine's key: the pk, optionally
+    *                    scoped by leading columns (`table_name` when
+    *                    one frame audits several tables). The last key
+    *                    is emitted as the string `pk_value`; carry the
+    *                    leading ones through `auditPassthrough`.
     */
   def auditBatch(
       existingPks: DataFrame,
       changes: DataFrame,
-      pk: String,
+      keys: Seq[String],
       seqCol: String,
       auditPassthrough: Seq[String] = Nil): DataFrame = {
-    val inBase = existingPks
-      .select(col(pk), lit(true).as("__in_base")).distinct()
+    val inBase = existingPks.select(keys.map(col) :+ lit(true).as("__in_base"): _*)
     val ch = changes
-      .join(inBase, Seq(pk), "left")
+      .join(inBase, keys, "left")
       .withColumn("__in_base", coalesce(col("__in_base"), lit(false)))
-    auditFrom(ch, pk, seqCol, auditPassthrough)
+    auditFrom(ch, keys, seqCol, auditPassthrough)
   }
 
   /** Per-event outcomes need the sequential per-key scan (window over
@@ -108,9 +113,9 @@ object Apply {
     * `ch` = changes with a `__in_base` membership flag attached.
     */
   private def auditFrom(
-      ch: DataFrame, pk: String, seqCol: String,
+      ch: DataFrame, keys: Seq[String], seqCol: String,
       auditPassthrough: Seq[String]): DataFrame = {
-    val byKey = Window.partitionBy(col(pk)).orderBy(col(seqCol))
+    val byKey = Window.partitionBy(keys.map(col): _*).orderBy(col(seqCol))
     // last INSERT/DELETE strictly before this event (null = none yet)
     val prevIdOp = last(
       when(col("operation") =!= "UPDATE", col("operation")), ignoreNulls = true)
@@ -129,7 +134,7 @@ object Apply {
 
     flagged.select(
       col(seqCol).as("cdc_seq") +:
-        col(pk).cast("string").as("pk_value") +:
+        col(keys.last).cast("string").as("pk_value") +:
         col("operation") +:
         when(col("__applied"), "SUCCESS").otherwise("TARGET_NOT_FOUND").as("status") +:
         col("__upsert_converted").as("upsert_converted") +:

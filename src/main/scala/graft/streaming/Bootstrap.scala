@@ -50,8 +50,10 @@ object Bootstrap {
     // the snapshot bypasses loop dedup (these rows ARE the table, not
     // echoes) but nothing else: same transform, same ordered apply,
     // same audit rows (op 'r' decodes to INSERT — S5)
+    // persisted: the sink reads it twice (delta stage, audit)
     val batch = pipeline.transformed(envelopes, mapping, direction)
-      .withColumn("loop_blocked", lit(false))
-    pipeline.applyMicroBatch(batch, mapping, direction)
+      .withColumn("loop_blocked", lit(false)).persist()
+    try pipeline.applyMicroBatch(Seq((batch, mapping, direction)))
+    finally { batch.unpersist(); () }
   }
 }

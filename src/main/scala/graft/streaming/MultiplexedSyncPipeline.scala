@@ -12,9 +12,10 @@ import graft.cdc._
   * branches union into ONE watermark + ONE loop-dedup state operator
   * (change hashes embed the target table —
   * [[graft.cdc.Hashing.loopHash]] — so keys can't collide across
-  * topics), and one `foreachBatch` routes each pair's slice to
-  * [[SyncPipeline.applyMicroBatch]], whose exactly-once choreography is
-  * gated per TABLE on the shared batch id. Each pair's typed target
+  * topics), and one `foreachBatch` hands every pair's slice to ONE
+  * epoch sink, [[SyncPipeline.applyMicroBatch]]: per-table delta
+  * stages, one audit job and one audit file per epoch, exactly-once
+  * on the shared batch id. Each pair's typed target
   * columns ride the union as a struct column of their own, so every
   * value reaches the apply with the type and precision the transform
   * gave it; `seq` / `event_ts` / `change_hash` / `operation` stay
@@ -80,39 +81,21 @@ final class MultiplexedSyncPipeline(
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         // one materialization of the shared front half (parse +
-        // transform + dedup state pass) so the per-topic applies read
-        // the cache, then the applies run CONCURRENTLY — they touch
-        // disjoint tables and the audit path is per-epoch-file
-        // (lock-free); serial applies measured 3.0k vs parallel ~5.2k
-        // events/s on the six-topic bench
+        // transform + dedup state pass); every slice of the epoch sink
+        // reads this cache, twice (delta stage, audit)
         val b = batch.persist()
-        def timed[A](phase: String)(f: => A): A =
-          TriggerTiming.timed("mux-trigger", phase)(f)
-        // populate the cache in ONE pass; a fully-empty micro-batch
-        // (watermark-advance triggers are steady-state) skips the
-        // per-topic fan-out entirely — no table has anything to gate
-        // on, and 6 abort-a-stage-write probes per empty trigger were
-        // measured at ~0.5 s of pure overhead per wave
-        if (timed("front-half")(b.count()) == 0L) { b.unpersist(); () }
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(pairs.size)
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          try {
-            val applies = pairs.zipWithIndex.map { case ((m, d), i) =>
-              scala.concurrent.Future {
-                val slice = b.filter(col("__route") === Registry.topicFor(d, m))
-                  .select(col("loop_blocked"), col("seq"), col("operation"),
-                    col("change_hash"), col(s"${payload(i)}.*"))
-                inner.applyMicroBatch(slice, m, d, id)
-              }
-            }
-            timed("applies")(scala.concurrent.Await.result(
-              scala.concurrent.Future.sequence(applies),
-              scala.concurrent.duration.Duration(10, "min")))
-            ()
-          } finally { pool.shutdown(); b.unpersist(); () }
-        }
+        // a fully-empty micro-batch (watermark-advance triggers are
+        // steady-state) skips the sink entirely — no table has anything
+        // to gate on, and 6 abort-a-stage-write probes per empty
+        // trigger were measured at ~0.5 s of pure overhead per wave
+        try {
+          if (TriggerTiming.timed("mux-trigger", "front-half")(b.count()) > 0L)
+            inner.applyMicroBatch(pairs.zipWithIndex.map { case ((m, d), i) =>
+              (b.filter(col("__route") === Registry.topicFor(d, m))
+                .select(col("loop_blocked"), col("seq"), col("operation"),
+                  col("change_hash"), col(s"${payload(i)}.*")), m, d)
+            }, id)
+        } finally { b.unpersist(); () }
       }
       .start()
   }

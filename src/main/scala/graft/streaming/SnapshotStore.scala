@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, hash, lit, max, pmod, struct, sum, to_date, when}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import graft.cdc.Apply
 
 /** Versioned merge-on-read parquet store — the engine's local stand-in
@@ -56,9 +56,10 @@ import graft.cdc.Apply
   *   keeps the chain's total file count at O(#versions) — the
   *   membership read lists `compactEvery` files, not
   *   `compactEvery × shuffle.partitions` (the batch frame arrives
-  *   32-way partitioned from the dedup stage, and writing it as-is
-  *   produced 32 near-empty files per trigger). Raise it if a single
-  *   trigger's volume outgrows one writer task.
+  *   partitioned as wide as the dedup stage — 6-way in the sync
+  *   query — and writing it as-is produces that many near-empty files
+  *   per trigger). Raise it if a single trigger's volume outgrows one
+  *   writer task.
   */
 final class SnapshotStore(
     spark: SparkSession, basePath: String, compactEvery: Int = 8,
@@ -196,6 +197,19 @@ final class SnapshotStore(
     if (!exists(schemaFile(dir))) None
     else Some(parseFp(readString(schemaFile(dir))))
 
+  private def fpSchema(fp: Seq[(String, String)]): StructType =
+    StructType(fp.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
+
+  /** One version dir, typed by its fingerprint: an explicit read schema
+    * starts no Spark job, where parquet footer inference starts one per
+    * read. A dir written before fingerprints existed falls back to
+    * inference.
+    */
+  private def readVersion(dir: String): DataFrame = readFingerprint(dir) match {
+    case Some(fp) => spark.read.schema(fpSchema(fp)).parquet(dir)
+    case None => spark.read.parquet(dir)
+  }
+
   /** Table-level copy of the newest delta layout — version dirs (and
     * their fingerprints) are reclaimed by [[vacuum]], but the LAYOUT
     * must outlive them: a base-only chain (manual [[compact]] then
@@ -247,26 +261,32 @@ final class SnapshotStore(
 
   /** All delta versions in [from, to] as ONE read with a `__v` version
     * column. One multi-path `spark.read` instead of one per delta: each
-    * separate read costs a driver-side file listing + footer schema
-    * inference (~100-200 ms), which at a 5 s trigger with up to
-    * `compactEvery-1` outstanding deltas was the bulk of the trigger's
-    * fixed cost. Delta schemas are identical by the commitDelta layout
-    * contract, so a positional union is safe; the version is recovered
-    * from the file path (`…/d<N>/part-….parquet`).
+    * separate read costs a driver-side file listing, and each inferred
+    * schema a footer-reading Spark job. When every dir's fingerprint
+    * agrees — the common case, a segment inside one layout — the read
+    * is typed by it and infers nothing. Delta schemas are identical by
+    * the commitDelta layout contract, so a positional union is safe;
+    * the version is recovered from the file path
+    * (`…/d<N>/part-….parquet`).
     */
   private def readDeltas(table: String, from: Int, to: Int): DataFrame = {
     val paths = (from to to)
       .filter(i => exists(deltaDir(table, i)))
       .map(i => deltaDir(table, i))
-    // mergeSchema: a range can cross an add-column evolution boundary
-    // (deltas SURVIVE the compaction the boundary forces), and the
-    // default single-footer inference would silently DROP the new
-    // column whenever an old-layout file's footer wins. Add-column is
-    // the only legal change (checkDeltaEvolution), appended at the
-    // tail, so the merged schema keeps the positional (seq, operation,
-    // pk) roles and old files read null in the new column — exactly
-    // the withMissingAsNull semantics.
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    // mergeSchema where the fingerprints disagree or are missing: a
+    // range can cross an add-column evolution boundary (deltas SURVIVE
+    // the compaction the boundary forces), and the default
+    // single-footer inference would silently DROP the new column
+    // whenever an old-layout file's footer wins. Add-column is the
+    // only legal change (checkDeltaEvolution), appended at the tail,
+    // so the merged schema keeps the positional (seq, operation, pk)
+    // roles and old files read null in the new column — exactly the
+    // withMissingAsNull semantics.
+    val reader = paths.map(readFingerprint).distinct match {
+      case Seq(Some(fp)) => spark.read.schema(fpSchema(fp))
+      case _ => spark.read.option("mergeSchema", "true")
+    }
+    reader.parquet(paths: _*)
       .withColumn("__v",
         org.apache.spark.sql.functions.regexp_extract(
           col("_metadata.file_path"), "/d(\\d+)/[^/]+$", 1).cast("int"))
@@ -400,7 +420,7 @@ final class SnapshotStore(
         s"of $table — its history was reclaimed")
     val b = baseAtOrBefore(table, version)
     if (b == version) {
-      val base = spark.read.parquet(baseDir(table, b))
+      val base = readVersion(baseDir(table, b))
       return if (schema == null) base else withMissingAsNull(base, schema.fields.toSeq)
     }
     val deltas = readDeltas(table, b + 1, version)
@@ -415,7 +435,7 @@ final class SnapshotStore(
       if (b == 0) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         if (schema != null) schema else StructType(fields.drop(2)))
-      else spark.read.parquet(baseDir(table, b))
+      else readVersion(baseDir(table, b))
     // a pre-evolution base lacks columns added later in the chain
     val reconciled = withMissingAsNull(base, fields.drop(3).toSeq)
     val ordered = deltas.withColumn("__ord", struct(col("__v"), col(seqCol)))
@@ -463,12 +483,8 @@ final class SnapshotStore(
             throw new IllegalArgumentException(
               s"changeFeed: table $table has no delta history at or " +
                 s"before v$toVersion"))
-          val schema = StructType(layout.map { case (n, t) =>
-            org.apache.spark.sql.types.StructField(n,
-              org.apache.spark.sql.types.DataType.fromDDL(t))
-          })
           spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fpSchema(layout))
             .withColumn("__v", lit(null).cast("int"))
       }
     val dataCols = feed.columns.filterNot(_ == "__v")
@@ -563,39 +579,80 @@ final class SnapshotStore(
       pkBounds: Option[(Any, Any)] = None,
       atVersion: Option[Int] = None): DataFrame = {
     refuseAdditive(table, "existingPks")
-    val pkOnly = StructType(schema.filter(_.name == pkName))
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pkOnly)
-    def bounded(df: DataFrame): DataFrame = pkBounds match {
-      case Some((lo, hi)) => df.filter(col(pkName).between(lit(lo), lit(hi)))
+    val chain = chainPks(table, pkName, pkBounds,
+      atVersion.getOrElse(currentVersion(table)), pk => Seq(pk.as(pkName)))
+    membership(Seq(chain), Seq(pkName), StructType(schema.filter(_.name == pkName)))
+  }
+
+  /** [[existingPks]] over several tables in ONE frame of `(table_name,
+    * pk_value)` — the epoch audit's membership read: each chain's base
+    * and slim delta reads, each at its own version and pk bounds, union
+    * before one aggregate and one outer join. `pk_value` is the pk cast
+    * to string; a table's pk has one type, so string equality is value
+    * equality within a table.
+    */
+  def existingKeys(reads: Seq[SnapshotStore.PkRead]): DataFrame = {
+    val chains = reads.map { r =>
+      refuseAdditive(r.table, "existingKeys")
+      chainPks(r.table, r.pkName, r.pkBounds, r.atVersion,
+        pk => Seq(lit(r.table).as("table_name"), pk.cast("string").as("pk_value")))
+    }
+    membership(chains, Seq("table_name", "pk_value"), StructType(Seq(
+      StructField("table_name", StringType), StructField("pk_value", StringType))))
+  }
+
+  /** One chain's membership inputs at `version`: the base's pks and the
+    * outstanding deltas' `(key, __op, __ord)` rows, both restricted to
+    * `pkBounds` on the typed pk (a pushed parquet filter) and then
+    * projected through `key`.
+    */
+  private def chainPks(table: String, pkName: String,
+      pkBounds: Option[(Any, Any)], version: Int,
+      key: Column => Seq[Column]): (Option[DataFrame], Option[DataFrame]) = {
+    def bounded(df: DataFrame, pk: String): DataFrame = pkBounds match {
+      case Some((lo, hi)) => df.filter(col(pk).between(lit(lo), lit(hi)))
       case None => df
     }
-    val version = atVersion.getOrElse(currentVersion(table))
-    if (version == 0) return empty
+    if (version == 0) return (None, None)
     val b = baseAtOrBefore(table, version)
-    val basePks =
-      if (b == 0) empty
-      else bounded(spark.read.parquet(baseDir(table, b)).select(col(pkName)))
-    if (b == version) return basePks
+    val base =
+      if (b == 0) None
+      else Some(bounded(readVersion(baseDir(table, b)), pkName).select(key(col(pkName)): _*))
+    if (b == version) return (base, None)
     val all = readDeltas(table, b + 1, version)
     // delta layout contract (commitDelta): [seqCol, operation, pk, data…]
     val f = all.schema.fields.filterNot(_.name == "__v")
-    val deltas = bounded(
-      all.select(col(f(2).name).as(pkName), col(f(1).name).as("__op"),
-        struct(col("__v"), col(f(0).name).as("__seq")).as("__ord")))
-    // per pk: the last existence-deciding (non-UPDATE) op across the
-    // outstanding chain, ordered by (version, seq) — null means only
-    // UPDATEs touched it, so the base decides
-    val decided = deltas.groupBy(col(pkName)).agg(
-      max(when(col("__op") =!= "UPDATE", struct(col("__ord"), col("__op"))))
-        .as("__last"))
-    basePks.withColumn("__in_base", lit(true))
-      .join(decided, Seq(pkName), "full_outer")
-      .filter(
-        when(col("__last").isNotNull,
-          col("__last").getField("__op") === "INSERT")
-        .otherwise(coalesce(col("__in_base"), lit(false))))
-      .select(col(pkName))
+    val deltas = bounded(all, f(2).name).select(key(col(f(2).name)) ++ Seq(
+      col(f(1).name).as("__op"),
+      struct(col("__v"), col(f(0).name).as("__seq")).as("__ord")): _*)
+    (base, Some(deltas))
+  }
+
+  /** The existence rule, written once for any key: per key, the last
+    * existence-deciding (non-UPDATE) op across the outstanding chain,
+    * ordered by (version, seq), wins; null means only UPDATEs touched
+    * it, so base membership decides.
+    */
+  private def membership(chains: Seq[(Option[DataFrame], Option[DataFrame])],
+      keys: Seq[String], keySchema: StructType): DataFrame = {
+    // a local empty relation, which the optimizer prunes: a chain with
+    // no base then costs no join input
+    val basePks = chains.flatMap(_._1).reduceOption(_.unionByName(_)).getOrElse(
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), keySchema))
+    chains.flatMap(_._2).reduceOption(_.unionByName(_)) match {
+      case None => basePks
+      case Some(deltas) =>
+        val decided = deltas.groupBy(keys.map(col): _*).agg(
+          max(when(col("__op") =!= "UPDATE", struct(col("__ord"), col("__op"))))
+            .as("__last"))
+        basePks.withColumn("__in_base", lit(true))
+          .join(decided, keys, "full_outer")
+          .filter(
+            when(col("__last").isNotNull,
+              col("__last").getField("__op") === "INSERT")
+            .otherwise(coalesce(col("__in_base"), lit(false))))
+          .select(keys.map(col): _*)
+    }
   }
 
   /** Write a full base snapshot version and flip the pointer. `meta`
@@ -1118,7 +1175,7 @@ final class SnapshotStore(
         s"v${horizon(table)} of $table — its history was reclaimed")
     val b = baseAtOrBefore(table, version)
     val base =
-      if (b == 0) None else Some(spark.read.parquet(baseDir(table, b)))
+      if (b == 0) None else Some(readVersion(baseDir(table, b)))
     val deltas =
       if (b == version) None
       else Some(readDeltas(table, b + 1, version).drop("__v"))
@@ -1313,4 +1370,14 @@ final class SnapshotStore(
     if (fs.exists(p) && hasFiles) spark.read.parquet(p.toString)
     else spark.emptyDataFrame
   }
+}
+
+object SnapshotStore {
+
+  /** One table's membership read for [[SnapshotStore.existingKeys]]:
+    * the pks of `table` as of committed version `atVersion`, restricted
+    * to `pkBounds` when given.
+    */
+  final case class PkRead(table: String, pkName: String,
+      pkBounds: Option[(Any, Any)], atVersion: Int)
 }

@@ -1,20 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cdc._
 
 /** The per-table stages of the CDC sync (SURVEY.md §3.1 restated
   * Spark-first): Kafka-shaped source (`topic`, `value`) → Debezium
   * envelope parse → config-driven transform → post-transform loop hash
-  * ([[transformed]]), and the ordered apply with upsert conversion +
-  * TARGET_NOT_FOUND + audit append ([[applyMicroBatch]]). The streaming
-  * query that joins them through the stateful loop-dedup — one pair or
-  * all six — is [[MultiplexedSyncPipeline.start]].
+  * ([[transformed]]), and the epoch sink that applies every table's
+  * slice of a trigger with upsert conversion + TARGET_NOT_FOUND and
+  * logs them all in one audit file ([[applyMicroBatch]]). The
+  * streaming query that joins them through the stateful loop-dedup —
+  * one pair or all six — is [[MultiplexedSyncPipeline.start]].
   *
   * Scale notes: parse/transform are narrow and codegen'd; the only wide
-  * stages are the dedup state shuffle (by change_hash) and the apply's
-  * pk-hash join+window — both partition by key and scale horizontally.
+  * stages are the dedup state shuffle (by change_hash) and the audit's
+  * (table, pk)-hash join+window — both partition by key and scale
+  * horizontally.
   * The snapshot store is the local stand-in for a MERGE sink.
   */
 final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
@@ -40,156 +42,181 @@ final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
       .withColumn("seq", unix_micros(col("source_ts")))
   }
 
-  /** One micro-batch: stage the live events as a DELTA (O(|batch|)
-    * written per trigger, never O(|table|)), audit all events against
-    * the pre-batch version, then commit delta and audit. Also the
-    * batch-replay entry point (processing a backlog parquet of events
-    * uses exactly this code path).
+  /** One epoch sink over every pair's slice of a trigger (or one
+    * batch-replay slice, with `batchId = -1`): stage each table's live
+    * events as a DELTA (O(|slice|) written, never O(|table|)), audit
+    * every event of every table in ONE job against the pre-batch
+    * versions, then commit each table's delta and the epoch's one
+    * audit file. Target tables must be distinct across `slices`. The
+    * sink caches nothing: a caller that hands it an expensive frame
+    * persists it (each slice is read twice, by its delta stage and by
+    * the audit).
     *
-    * Per-trigger action budget: the staged delta write IS the
-    * emptiness probe — one pass through the batch populates the cache
-    * and observes (via two `CollectMetrics` nodes, one above and one
-    * below the live filter) the total event count, the live count and
-    * the live pk min/max in the same job; a no-data batch's staged
-    * (empty) delta is simply aborted. The only other action is the
-    * audit staging write (whose only O(|table|) touch is
-    * `SnapshotStore.existingPks`, a pk/op-column-only membership read
-    * pinned to the pre-batch version and pruned to the batch's pk
-    * range) — plus the amortized 1/compactEvery delta-chain
-    * compaction. `PerTriggerJobSpec` pins the counts (2 actions on a
-    * data batch, 1 on a no-data batch).
+    * Action budget: one delta stage per slice, run concurrently (the
+    * stages touch disjoint tables). Each stage IS its table's emptiness
+    * probe — two `CollectMetrics` nodes, one above and one below the
+    * live filter, observe the event count, the live count and the live
+    * pk min/max in the write job itself; an empty slice's staged
+    * (empty) delta is aborted. Then ONE audit staging write over all
+    * tables, whose only O(|table|) touch is
+    * [[SnapshotStore.existingKeys]], a pk/op-column-only membership
+    * read of every chain pinned to its pre-batch version and pruned to
+    * its slice's pk range — plus the amortized 1/compactEvery
+    * delta-chain compaction at finalize. So n slices cost n + 1
+    * actions, and a slice set with no events costs n. `PerTriggerJobSpec`
+    * pins the counts (one pair: 2 on a data batch, 1 on a no-data
+    * batch; three pairs: 4).
     *
-    * Delivery: exactly-once for BOTH the data table and the audit log.
-    * foreachBatch replays a crashed epoch; the epoch marker commits
-    * atomically with the delta version (pointer flip), and the audit
-    * file's move-into-place is idempotent per epoch key. Crash windows:
-    * before [[SnapshotStore.finalizeDelta]] → nothing committed, full
-    * redo; between finalize and audit publish → replay sees
-    * `meta == batchId`, recomputes ONLY the audit frame against
-    * `currentVersion - 1` (the pre-batch version) and publishes;
-    * after publish → replay finds the epoch's audit file and no-ops.
+    * Delivery: exactly-once for BOTH the data tables and the audit
+    * log. foreachBatch replays a crashed epoch; each table's epoch
+    * marker commits atomically with its delta version (pointer flip),
+    * and the audit file's move-into-place is idempotent per epoch key.
+    * Commit order: stage deltas, stage the audit, finalize each table,
+    * publish the audit. Crash windows: before any finalize → nothing
+    * committed, full redo; after k of n tables finalized, before
+    * publish → the replay drains each finalized table's slice into a
+    * noop sink (its observations still come from that one pass) and
+    * audits it against `currentVersion - 1`, stages the rest as usual,
+    * and publishes; after publish → replay finds a marker equal to
+    * `batchId` and the epoch's audit file, and no-ops.
     */
   def applyMicroBatch(
-      batch: DataFrame,
-      mapping: TableMapping,
-      direction: Direction.Value,
+      slices: Seq[(DataFrame, TableMapping, Direction.Value)],
       batchId: Long = -1L): Unit = {
-    val target = mapping.targetFor(direction)
-    val targetCols = mapping.specsFor(direction).map(_._1)
-    val valueCols = targetCols.filterNot(_ == target.pk)
-    val dirName = if (direction == Direction.AsisToTobe) "ASIS_TO_TOBE" else "TOBE_TO_ASIS"
+    case class Slice(batch: DataFrame, target: TableSide,
+        targetCols: Seq[String], dirName: String, meta: Option[Long]) {
+      val deltaAlready: Boolean = meta.contains(batchId)
+    }
+    case class Staged(slice: Slice, version: Int, events: Long,
+        live: Long, lo: Any, hi: Any)
 
-    val meta = if (batchId >= 0) store.currentMeta(target.table).map(_.toLong) else None
-    if (meta.exists(_ > batchId)) return // epoch fully applied long ago
-    // delta already committed (crash between pointer flip and audit
-    // publish) — only the audit can still be outstanding
-    val deltaAlready = meta.contains(batchId)
+    val all = slices.map { case (batch, m, d) =>
+      val target = m.targetFor(d)
+      Slice(batch, target, m.specsFor(d).map(_._1),
+        if (d == Direction.AsisToTobe) "ASIS_TO_TOBE" else "TOBE_TO_ASIS",
+        if (batchId >= 0) store.currentMeta(target.table).map(_.toLong) else None)
+    }
+    require(all.map(_.target.table).distinct.size == all.size,
+      s"applyMicroBatch: target tables must be distinct, got ${all.map(_.target.table)}")
+    // one audit file per epoch and pair set; a single pair keeps the
+    // per-table key `<table>_<direction>_e<id>`
+    val pairSet = all.map(s => s"${s.target.table}_${s.dirName}").mkString("+")
     val auditKey =
-      if (batchId >= 0) s"${target.table}_${dirName}_e$batchId"
-      else s"${target.table}_${dirName}_${java.util.UUID.randomUUID()}"
-    if (deltaAlready && store.auditEpochLanded(auditKey)) return
+      if (batchId >= 0) s"${pairSet}_e$batchId"
+      else s"${pairSet}_${java.util.UUID.randomUUID()}"
+    // a table whose marker passed this epoch applied it long ago
+    val pending = all.filterNot(_.meta.exists(_ > batchId))
+    if (pending.exists(_.deltaAlready) && store.auditEpochLanded(auditKey)) return
 
     def timed[A](phase: String)(f: => A): A =
       TriggerTiming.timed("trigger", phase)(f)
-    val cached = batch.cache()
-    try {
-      val blocked = cached.filter(col("loop_blocked"))
-      val live = cached.filter(!col("loop_blocked"))
 
-      // Stage (write, don't yet commit) the delta. This ONE job is the
-      // whole front half of the trigger: it populates the batch cache
-      // (so the audit write below is a pure cache read), counts every
-      // event via a CollectMetrics ABOVE the live filter — the
-      // emptiness probe; no-data micro-batches are a steady-state fact
-      // of life, the engine fires one whenever the watermark advances —
-      // and observes the live count and pk min/max below the filter,
-      // the bounds that buy row-group pruning of the membership read.
-      // An empty batch costs one zero-row write (deltaWriteParts=1, a
-      // single empty reduce task, no files) which is aborted on the
-      // spot; a separate count() probe would cost the same state-store
-      // pass and one more driver action on EVERY data batch. A replay
-      // whose delta already committed drains the same observed frame
-      // into a noop sink instead of staging it.
+    def stage(s: Slice): Staged = {
+      val pk = s.target.pk
       val obsAll = org.apache.spark.sql.Observation()
       val obsD = org.apache.spark.sql.Observation()
-      val probed = cached.observe(obsAll, count(lit(1)).as("events"))
+      val probed = s.batch.observe(obsAll, count(lit(1)).as("events"))
         .filter(!col("loop_blocked"))
-        .select((Seq("seq", "operation") ++ targetCols).map(col): _*)
+        .select((Seq("seq", "operation") ++ s.targetCols).map(col): _*)
         .observe(obsD, count(lit(1)).as("n"),
-          min(col(target.pk)).as("lo"), max(col(target.pk)).as("hi"))
-      val staged =
-        if (deltaAlready) {
-          timed("probe")(probed.write.format("noop").mode("overwrite").save())
+          min(col(pk)).as("lo"), max(col(pk)).as("hi"))
+      // a replay whose delta already committed drains the same observed
+      // frame into a noop sink instead of staging it
+      val version =
+        if (s.deltaAlready) {
+          probed.write.format("noop").mode("overwrite").save()
           -1
-        } else timed("stageDelta")(store.stageDelta(target.table, probed,
-          target.pk, "seq", valueCols,
-          meta = if (batchId >= 0) Some(batchId.toString) else None))
-      if (obsAll.get("events").asInstanceOf[Long] == 0L) {
-        if (staged >= 0) store.abortDelta(target.table, staged)
-        return
+        } else store.stageDelta(s.target.table, probed, pk, "seq",
+          s.targetCols.filterNot(_ == pk),
+          meta = if (batchId >= 0) Some(batchId.toString) else None)
+      val events = obsAll.get("events").asInstanceOf[Long]
+      if (events == 0L) Staged(s, version, 0L, 0L, null, null)
+      else {
+        val m = obsD.get
+        Staged(s, version, events, m("n").asInstanceOf[Long], m("lo"), m("hi"))
       }
-      val m = obsD.get
-      val (liveCount, lo, hi) = (m("n").asInstanceOf[Long], m("lo"), m("hi"))
-      // audit statuses (TARGET_NOT_FOUND / upsert conversion) are
-      // defined against the table as of BEFORE this batch: the staged
-      // delta is invisible until finalize, and the replay path pins
-      // `currentVersion - 1` explicitly. Membership comes from the
-      // column-pruned pk/op read — the full base⊕delta reconstruction
-      // never runs on the trigger path — restricted to the batch's pk
-      // range so row-group statistics prune the base scan (the zone-map
-      // property that keeps the 5 s trigger flat as the table grows).
-      val preVersion =
-        if (deltaAlready) store.currentVersion(target.table) - 1
-        else staged - 1
-      val schema = org.apache.spark.sql.types.StructType(
-        Registry.targetSchema(target).filter(f => targetCols.contains(f.name)))
-      val existing =
-        if (liveCount == 0L)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(schema.filter(_.name == target.pk)))
-        else store.existingPks(target.table, schema, target.pk,
-          pkBounds = Some((lo, hi)), atVersion = Some(preVersion))
-      val liveAuditRaw = Apply.auditBatch(
-        existing, live.select((Seq("seq", "operation") ++ targetCols :+ "change_hash").map(col): _*),
-        target.pk, "seq", auditPassthrough = Seq("change_hash"))
+    }
 
-      // error-code taxonomy (docs/02-설계/05_에러코드_체계.md, designed-only
-      // in the reference): E_001 missing target, E_002 pk-dup upsert,
-      // I_001 loop suppression
-      def errorCode(status: Column, converted: Column): Column =
-        when(status === "TARGET_NOT_FOUND", "SYNC_E_001")
-          .when(status === "LOOP_BLOCKED", "SYNC_I_001")
-          .when(converted, "SYNC_E_002")
-          .otherwise(lit(null).cast("string"))
-      // one driver-side stamp for the whole epoch (current_timestamp()
-      // would be per-query-constant anyway); keeps the epoch in exactly
-      // one log_date partition, which the publish step needs
-      val logTime = new java.sql.Timestamp(System.currentTimeMillis())
-      def auditCols(df: DataFrame, status: Column, converted: Column) = df.select(
-        lit(dirName).as("direction"),
-        lit(target.table).as("table_name"),
-        col("operation"),
-        col("pk_value"),
-        status.as("status"),
-        converted.as("upsert_converted"),
-        errorCode(status, converted).as("error_code"),
-        col("change_hash"),
-        lit(logTime).as("log_time"))
+    val staged = timed("stageDeltas")(concurrently(pending)(stage))
+    // an empty slice leaves no version: the table sits this epoch out
+    staged.filter(t => t.events == 0L && t.version >= 0)
+      .foreach(t => store.abortDelta(t.slice.target.table, t.version))
+    val epoch = staged.filter(_.events > 0L)
+    if (epoch.isEmpty) return
 
-      val liveAudit = auditCols(liveAuditRaw, col("status"), col("upsert_converted"))
-      val blockedAudit = auditCols(
-        blocked.withColumn("pk_value", col(target.pk).cast("string")),
-        lit("LOOP_BLOCKED"), lit(false))
-      timed("stageAudit")(store.stageEpochAudit(
-        liveAudit.unionByName(blockedAudit), auditKey))
+    // audit statuses (TARGET_NOT_FOUND / upsert conversion) are defined
+    // against each table as of BEFORE this batch: a staged delta is
+    // invisible until finalize, and a finalized one (replay) is pinned
+    // away with `currentVersion - 1`. Membership comes from the
+    // column-pruned pk/op reads — the full base⊕delta reconstruction
+    // never runs on the trigger path — restricted to each slice's pk
+    // range so row-group statistics prune the base scans (the zone-map
+    // property that keeps the trigger flat as the tables grow).
+    val existing = store.existingKeys(epoch.filter(_.live > 0L).map { t =>
+      val table = t.slice.target.table
+      SnapshotStore.PkRead(table, t.slice.target.pk, Some((t.lo, t.hi)),
+        if (t.slice.deltaAlready) store.currentVersion(table) - 1 else t.version - 1)
+    })
+    // every event of the epoch in one frame and one shuffle. Blocked
+    // echoes ride the same window in key partitions of their own —
+    // `loop_blocked` is part of the key and false in every membership
+    // row — so they neither see nor change any pk's existence; their
+    // status is overridden below. One task per slice: each slice is a
+    // filter over the trigger's cached batch, and a task per cached
+    // partition per slice costs more to schedule than the filter does.
+    val events = epoch.map { t =>
+      t.slice.batch.select(lit(t.slice.dirName).as("direction"),
+        lit(t.slice.target.table).as("table_name"), col("loop_blocked"),
+        col(t.slice.target.pk).cast("string").as("pk_value"),
+        col("seq"), col("operation"), col("change_hash"))
+    }.reduce(_.unionByName(_)).coalesce(epoch.size)
+    val audited = Apply.auditBatch(existing.withColumn("loop_blocked", lit(false)),
+      events, Seq("table_name", "loop_blocked", "pk_value"), "seq",
+      auditPassthrough = Seq("table_name", "loop_blocked", "direction", "change_hash"))
 
-      // any non-empty batch commits (a blocked-only batch commits an
-      // empty delta) so the epoch marker always advances past it; the
-      // fully-empty case returned at the probe, so the audit frame here
-      // always has `events` (= live + blocked) > 0 rows
-      if (staged >= 0) timed("finalizeDelta")(store.finalizeDelta(target.table, staged))
-      store.publishEpochAudit(auditKey,
-        logTime.toLocalDateTime.toLocalDate)
-    } finally cached.unpersist()
+    val blocked = col("loop_blocked")
+    val status = when(blocked, "LOOP_BLOCKED").otherwise(col("status"))
+    val converted = !blocked && col("upsert_converted")
+    // error-code taxonomy (docs/02-설계/05_에러코드_체계.md, designed-only
+    // in the reference): E_001 missing target, E_002 pk-dup upsert,
+    // I_001 loop suppression
+    val errorCode = when(status === "TARGET_NOT_FOUND", "SYNC_E_001")
+      .when(status === "LOOP_BLOCKED", "SYNC_I_001")
+      .when(converted, "SYNC_E_002")
+      .otherwise(lit(null).cast("string"))
+    // one driver-side stamp for the whole epoch (current_timestamp()
+    // would be per-query-constant anyway); keeps the epoch in exactly
+    // one log_date partition, which the publish step needs
+    val logTime = new java.sql.Timestamp(System.currentTimeMillis())
+    timed("stageAudit")(store.stageEpochAudit(audited.select(
+      col("direction"),
+      col("table_name"),
+      col("operation"),
+      col("pk_value"),
+      status.as("status"),
+      converted.as("upsert_converted"),
+      errorCode.as("error_code"),
+      col("change_hash"),
+      lit(logTime).as("log_time")), auditKey))
+
+    // every table with events commits (a blocked-only slice commits an
+    // empty delta) so its epoch marker always advances past the epoch;
+    // the audit file publishes last, after every pointer flip
+    timed("commit") {
+      epoch.filter(_.version >= 0)
+        .foreach(t => store.finalizeDelta(t.slice.target.table, t.version))
+      store.publishEpochAudit(auditKey, logTime.toLocalDateTime.toLocalDate)
+    }
+  }
+
+  /** `f` over `xs`, one thread each, for the per-table delta stages. */
+  private def concurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(xs.size max 1)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    try scala.concurrent.Await.result(
+      scala.concurrent.Future.sequence(xs.map(x => scala.concurrent.Future(f(x)))),
+      scala.concurrent.duration.Duration(10, "min"))
+    finally pool.shutdown()
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-/** Shared per-phase trigger timing, gated on `GRAFT_TRIGGER_TIMING` —
-  * one definition so the per-topic and multiplexed pipelines' wall
-  * diagnostics cannot drift apart.
+/** Per-phase trigger wall times on stderr, gated on
+  * `GRAFT_TRIGGER_TIMING`: the sync query's `front-half`, then the
+  * epoch sink's `stageDeltas`, `stageAudit` and `commit`.
   */
 private[streaming] object TriggerTiming {
   def timed[A](tag: String, phase: String)(f: => A): A = {

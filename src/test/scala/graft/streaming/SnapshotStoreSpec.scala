@@ -205,6 +205,43 @@ class SnapshotStoreSpec extends SparkSpec {
       "the base scan should be pruned to the pk column alone")
   }
 
+  test("snapshot and existingPks over a fingerprinted base plus 3 deltas " +
+      "are built without starting a Spark job") {
+    val (store, _) = newStore(compactEvery = 100)
+    store.commit("T", Seq((1, "x"), (2, "y")).toDF("ID", "VAL"))
+    commit(store, (1L, "UPDATE", 1, "x2"))
+    commit(store, (2L, "INSERT", 3, "z"))
+    commit(store, (3L, "DELETE", 2, "y"))
+    val sch = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("ID",
+        org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField("VAL",
+        org.apache.spark.sql.types.StringType)))
+    // scheduler jobs started while building (not running) a frame: a
+    // parquet read that infers its schema from footers starts one
+    def jobsDuring(f: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        f
+        Thread.sleep(1000) // the listener bus is async
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get()
+    }
+    assert(jobsDuring(store.snapshot("T", sch)) == 0)
+    assert(jobsDuring(store.existingPks("T", sch, "ID")) == 0)
+    // and the typed reads see the data
+    assert(store.snapshot("T", sch).as[(Int, String)].collect().toMap ==
+      Map(1 -> "x2", 3 -> "z"))
+    assert(store.existingPks("T", sch, "ID").as[Int].collect().toSet == Set(1, 3))
+  }
+
   test("full commit() versions interleave with deltas as bases") {
     val (store, _) = newStore(compactEvery = 100)
     store.commit("T", Seq((1, "x"), (2, "y")).toDF("ID", "VAL"))
