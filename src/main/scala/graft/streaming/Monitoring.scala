@@ -46,11 +46,4 @@ object Monitoring {
   def recentSince(audit: DataFrame, n: Int, since: java.sql.Date,
       errorsOnly: Boolean = false): DataFrame =
     recent(audit.filter(col("log_date") >= lit(since)), n, errorsOnly)
-
-  /** A5: status breakdown with optional LIKE filter (SimulatorController). */
-  def statusBreakdown(audit: DataFrame, tableLike: Option[String]): DataFrame = {
-    val f = tableLike.map(t => audit.filter(upper(col("table_name")).contains(t.toUpperCase)))
-      .getOrElse(audit)
-    f.groupBy(col("status")).agg(count(lit(1)).as("cnt")).orderBy(col("status"))
-  }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, hash, lit, max, pmod, struct, sum, to_date, when}
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DateType, StringType, StructField, StructType, TimestampType}
 import graft.cdc.Apply
 
 /** Versioned merge-on-read parquet store — the engine's local stand-in
@@ -33,7 +33,9 @@ import graft.cdc.Apply
   * transaction log). Replaying a crashed micro-batch appends a
   * duplicate delta whose events are row-identical, which applyBatch's
   * max_by/last-op semantics absorb — delta commits are
-  * value-idempotent. Audit rows append to `_audit` (CDC_SYNC_LOG).
+  * value-idempotent. Audit rows (CDC_SYNC_LOG, one schema:
+  * [[SnapshotStore.auditSchema]]) reach `_audit` only through an epoch
+  * stage + publish.
   *
   * Scale: this is the fix for the full-snapshot-rewrite ceiling — per
   * 5 s trigger the sink now writes O(|batch|) bytes; the O(|table|)
@@ -41,7 +43,7 @@ import graft.cdc.Apply
   * check) and an amortized 1/compactEvery compaction write.
   *
   * All filesystem access (pointer/meta/fingerprint/horizon markers,
-  * version-dir lifecycle, audit compaction/publication) goes through
+  * version-dir lifecycle, audit publication) goes through
   * the Hadoop [[FileSystem]] resolved from `basePath`'s scheme — the
   * same seam as [[EpochCommit]] — so the store runs unchanged on
   * HDFS-semantics storage. The commit points are an atomic small-file
@@ -51,19 +53,16 @@ import graft.cdc.Apply
   * a transactional table format underneath, same constraint as
   * EpochCommit documents.
   */
-/** @param deltaWriteParts file count per delta version. Deltas are
-  *   trigger-bounded (5 s of CDC traffic), so one file per version
-  *   keeps the chain's total file count at O(#versions) — the
-  *   membership read lists `compactEvery` files, not
-  *   `compactEvery × shuffle.partitions` (the batch frame arrives
-  *   partitioned as wide as the dedup stage — 6-way in the sync
-  *   query — and writing it as-is produces that many near-empty files
-  *   per trigger). Raise it if a single trigger's volume outgrows one
-  *   writer task.
-  */
 final class SnapshotStore(
-    spark: SparkSession, basePath: String, compactEvery: Int = 8,
-    deltaWriteParts: Int = 1) {
+    spark: SparkSession, basePath: String, compactEvery: Int = 8) {
+
+  /** One file per delta version: deltas are trigger-bounded, and the
+    * batch frame arrives as wide as the dedup stage, so writing it as-is
+    * leaves that many near-empty files per trigger; one keeps the
+    * chain's file count, and the membership read's listing, at
+    * O(#versions).
+    */
+  private val deltaWriteParts = 1
 
   // one FileSystem for the whole store: every path lives under
   // basePath, so a single scheme-resolved instance covers them all
@@ -770,7 +769,7 @@ final class SnapshotStore(
     * Single-writer assumption (same as every committing entry point):
     * not safe concurrent with an in-flight [[commit]]/[[commitDelta]]
     * on the same table — both would claim version `v+1`. Run it on a
-    * quiesced table, like [[compactAudit]].
+    * quiesced table.
     *
     * The current version's `_graft_meta` epoch marker carries forward
     * into the new base: compaction changes the table's representation,
@@ -1218,113 +1217,72 @@ final class SnapshotStore(
       .filter(measures.map(col(_) =!= 0L).reduce(_ || _))
   }
 
-  /** Fold each audit date partition's append-per-trigger files into one
-    * file — a 5 s trigger writes ~17k files/day, and monitoring scans
-    * pay per-file open costs forever without this. Maintenance-window
-    * operation: per-date rewrite (data lands in the replacement dir
-    * BEFORE the original is removed), not safe concurrent with an
-    * in-flight [[appendAudit]] on the same date — run it on closed
-    * (past) dates or with the pipeline quiesced.
-    */
-  def compactAudit(): Unit = {
-    val root = new Path(s"$basePath/_audit")
-    if (!fs.exists(root)) return
-    def children(prefix: String): Seq[Path] =
-      fs.listStatus(root).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith(prefix))
-    // recovery sweep: a crash between the two moves below leaves the
-    // date only in its .…_old dir — restore it before compacting
-    children(".log_date=").filter(_.getName.endsWith("._old"))
-      .foreach { old =>
-        val orig = new Path(old.getParent,
-          old.getName.stripPrefix(".").stripSuffix("._old"))
-        if (!fs.exists(orig)) renameOrFail(old, orig)
-        else fs.delete(old, true)
-      }
-    children("log_date=").foreach { d =>
-      // dot-prefixed dirs are invisible to Spark's partition discovery,
-      // so no crash point double-counts the date: data lands in tmp
-      // first, the original steps aside (recoverable, above), the
-      // replacement moves in, and only then does the original die
-      val name = d.getName
-      val tmp = new Path(d.getParent, "." + name + "._compacting")
-      val old = new Path(d.getParent, "." + name + "._old")
-      spark.read.parquet(d.toString).coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      renameOrFail(d, old)
-      renameOrFail(tmp, d)
-      fs.delete(old, true)
-    }
-  }
-
-  /** Audit rows append partitioned by `log_date`: the audit table is
-    * the one append-forever table in the system, so date partitioning
-    * is what keeps `Monitoring.recent`/`statusBreakdown` scans pruned
-    * when the log is 100× today's volume (`AuditPruneSpec` asserts the
-    * partition filter reaches the scan).
-    */
-  /** Synchronized because the audit directory is the ONE path every
-    * (mapping, direction) query appends to: Spark's FileOutputCommitter
-    * stages every job writing to a directory under the SAME
-    * `<dir>/_temporary/0`, so two concurrent appends clobber each
-    * other's staging (observed as FileNotFoundException on commit —
-    * `ConcurrentPipelineSpec` runs all six queries at once). All
-    * queries against one store share this driver-side object, so a JVM
-    * lock fully serializes the (tiny, per-trigger) audit jobs; data
-    * deltas need no lock — each table writes its own version dir. A
-    * multi-driver deployment would put the audit sink on a
-    * transactional table format instead.
-    */
-  def appendAudit(df: DataFrame): Unit = synchronized {
-    df.withColumn("log_date", to_date(col("log_time")))
-      .write.mode(SaveMode.Append)
-      .partitionBy("log_date").parquet(s"$basePath/_audit")
-  }
-
-  // ---- exactly-once per-epoch audit append -------------------------
+  // ---- the audit log -----------------------------------------------
   //
-  // [[appendAudit]] is at-least-once under streaming replay (a crash
-  // between append and epoch commit duplicates the epoch's rows) and
-  // serialized under concurrency (every append to the directory shares
-  // one FileOutputCommitter `_temporary/0`, hence the JVM lock above).
-  // The epoch path fixes both: the epoch's rows land in a PRIVATE
-  // dot-directory (invisible to readers and to partition discovery),
-  // then ONE deterministically-named file moves into the date
+  // One way in: an epoch's rows land in a PRIVATE dot-directory
+  // (invisible to readers and to partition discovery), then ONE
+  // deterministically-named file per date moves into its date
   // partition. The move is the commit point — a replay that finds the
-  // file already in place skips, and two pipelines never share a
-  // staging path, so no lock. Epoch audit rows are all stamped with one
-  // driver-side log_time, so an epoch spans exactly one log_date.
+  // file already in place skips it, and two writers never share a
+  // staging path, so no lock. The sink stamps an epoch's rows with one
+  // log_time, so a sync epoch is one file in one log_date.
 
-  private def epochStagingDir(key: String) = s"$basePath/_audit/.epochs/$key"
+  private def auditRoot = s"$basePath/_audit"
+  private def epochStagingDir(key: String) = s"$auditRoot/.epochs/$key"
 
-  /** Write one epoch's audit rows to its private staging dir
-    * (Overwrite — a replayed crash simply rewrites it). One Spark job;
+  /** Write one epoch's audit rows to its private staging dir, one file
+    * per `log_date` (Overwrite — a replayed crash simply rewrites it).
+    * `df` carries exactly the [[SnapshotStore.auditSchema]] columns
+    * except `log_date`, which derives from `log_time` here, in the
+    * session time zone, as the staging dir's partition. One Spark job;
     * attach an `observe` to `df` to count rows in the same job.
-    * `log_date` is NOT materialized in the file — the publish step's
-    * partition directory supplies it on read, exactly like
-    * [[appendAudit]]'s `partitionBy` files (a data column shadowing
-    * the partition column would trip COLUMN_ALREADY_EXISTS).
     */
-  def stageEpochAudit(df: DataFrame, key: String): Unit =
-    df.repartition(1) // keep the audit join/window parallel upstream
-      .write.mode(SaveMode.Overwrite).parquet(epochStagingDir(key))
+  def stageEpochAudit(df: DataFrame, key: String): Unit = {
+    val cols = SnapshotStore.auditSchema.fields.toSeq.filterNot(_.name == "log_date")
+    val given = df.schema.fields.toSeq
+    def named(fields: Seq[StructField]) =
+      fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")
+    require(given.map(f => f.name -> f.dataType).toSet == cols.map(f => f.name -> f.dataType).toSet,
+      s"audit rows must carry exactly the columns ${named(cols)}; got ${named(given)}")
+    df.select(cols.map(f => col(f.name)): _*)
+      .withColumn("log_date", to_date(col("log_time")))
+      .repartition(1) // keep the audit join/window parallel upstream
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("log_date").parquet(epochStagingDir(key))
+  }
 
-  /** Commit a staged epoch: move its single part file to
-    * `_audit/log_date=<d>/<key>.parquet`. Idempotent — if the
-    * destination exists (replay after a crash right after the move),
-    * the staged copy is discarded instead.
+  /** Commit a staged epoch: move each staged date's single file to
+    * `_audit/log_date=<d>/<key>.parquet`. Idempotent — a destination
+    * that exists (replay after a crash right after the move) keeps its
+    * file, and the staged copy is discarded.
     */
-  def publishEpochAudit(key: String, logDate: java.time.LocalDate): Unit = {
+  def publishEpochAudit(key: String): Unit = {
     val staging = new Path(epochStagingDir(key))
-    val part = fs.listStatus(staging).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(
-        s"no staged audit file for epoch $key"))
-    val destDir = new Path(s"$basePath/_audit/log_date=$logDate")
-    fs.mkdirs(destDir)
-    val dest = new Path(destDir, s"$key.parquet")
-    if (!fs.exists(dest)) renameOrFail(part, dest)
+    fs.listStatus(staging).map(_.getPath)
+      .filter(_.getName.startsWith("log_date="))
+      .foreach { d =>
+        val part = fs.listStatus(d).map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")) match {
+            case Array(p) => p
+            case ps => throw new IllegalStateException(
+              s"expected one staged audit file in $d, found ${ps.length}")
+          }
+        val destDir = new Path(s"$auditRoot/${d.getName}")
+        fs.mkdirs(destDir)
+        val dest = new Path(destDir, s"$key.parquet")
+        if (!fs.exists(dest)) renameOrFail(part, dest)
+      }
     fs.delete(staging, true)
+  }
+
+  /** Append a batch of audit rows from outside a sync epoch: a stage +
+    * publish under a fresh key. `df` must be on the audit schema (see
+    * [[stageEpochAudit]]); a frame that is not is refused.
+    */
+  def appendAudit(df: DataFrame): Unit = {
+    val key = java.util.UUID.randomUUID().toString
+    stageEpochAudit(df, key)
+    publishEpochAudit(key)
   }
 
   /** Did epoch `key`'s audit file ever publish? Replay-only check (the
@@ -1334,45 +1292,39 @@ final class SnapshotStore(
     * per-trigger path.
     */
   def auditEpochLanded(key: String): Boolean = {
-    val root = new Path(s"$basePath/_audit")
+    val root = new Path(auditRoot)
     fs.exists(root) && fs.listStatus(root).map(_.getPath)
       .filter(_.getName.startsWith("log_date="))
       .exists(d => fs.exists(new Path(d, s"$key.parquet")))
   }
 
-  def audit(): DataFrame = {
-    val p = new Path(s"$basePath/_audit")
-    // an all-blocked-free EMPTY micro-batch appends zero rows, leaving a
-    // directory with no parquet files — treat that as "no audit yet"
-    // rather than letting schema inference fail
-    // dot-dirs (.epochs staging, compaction tmp) are invisible to the
-    // Spark read below, so they must not count as "has audit" either
-    // "hidden" = any path component BELOW the audit root is
-    // dot-prefixed (checking the whole URI would misfire on a
-    // dot-named ancestor of basePath itself)
-    def hidden(f: Path): Boolean = {
-      var cur = f
-      while (cur != null && cur.getName != "_audit") {
-        if (cur.getName.startsWith(".")) return true
-        cur = cur.getParent
-      }
-      false
-    }
-    def hasFiles: Boolean = {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next().getPath
-        found = f.getName.endsWith(".parquet") && !hidden(f)
-      }
-      found
-    }
-    if (fs.exists(p) && hasFiles) spark.read.parquet(p.toString)
-    else spark.emptyDataFrame
-  }
+  /** The audit log, partitioned by `log_date` so a day-bounded query
+    * prunes its scan (`AuditPruneSpec`). Read with
+    * [[SnapshotStore.auditSchema]]: no footer inference, so building the
+    * frame starts no Spark job, and an empty log still has its columns.
+    * Staging dirs are dot-prefixed, which Spark's listing skips.
+    */
+  def audit(): DataFrame =
+    if (exists(auditRoot))
+      spark.read.schema(SnapshotStore.auditSchema).parquet(auditRoot)
+    else
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), SnapshotStore.auditSchema)
 }
 
 object SnapshotStore {
+
+  /** The audit log's one schema (CDC_SYNC_LOG): the columns every audit
+    * write carries, then the `log_date` partition column that
+    * [[SnapshotStore.stageEpochAudit]] derives from `log_time`.
+    */
+  val auditSchema: StructType = StructType(
+    Seq("direction", "table_name", "operation", "pk_value", "status")
+      .map(StructField(_, StringType)) ++ Seq(
+    StructField("upsert_converted", BooleanType),
+    StructField("error_code", StringType),
+    StructField("change_hash", StringType),
+    StructField("log_time", TimestampType),
+    StructField("log_date", DateType)))
 
   /** One table's membership read for [[SnapshotStore.existingKeys]]:
     * the pks of `table` as of committed version `atVersion`, restricted

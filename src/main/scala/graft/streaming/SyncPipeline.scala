@@ -71,8 +71,11 @@ final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
     * log. foreachBatch replays a crashed epoch; each table's epoch
     * marker commits atomically with its delta version (pointer flip),
     * and the audit file's move-into-place is idempotent per epoch key.
-    * Commit order: stage deltas, stage the audit, finalize each table,
-    * publish the audit. Crash windows: before any finalize → nothing
+    * Commit order: stage deltas; stage the audit, whose one `log_time`
+    * stamp puts the epoch in one `log_date`; finalize each table;
+    * publish the audit, moving its one file into that date's partition
+    * (the store's only audit write path, which `appendAudit` also
+    * takes). Crash windows: before any finalize → nothing
     * committed, full redo; after k of n tables finalized, before
     * publish → the replay drains each finalized table's slice into a
     * noop sink (its observations still come from that one pass) and
@@ -186,7 +189,7 @@ final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
       .otherwise(lit(null).cast("string"))
     // one driver-side stamp for the whole epoch (current_timestamp()
     // would be per-query-constant anyway); keeps the epoch in exactly
-    // one log_date partition, which the publish step needs
+    // one log_date partition, so the epoch is one audit file
     val logTime = new java.sql.Timestamp(System.currentTimeMillis())
     timed("stageAudit")(store.stageEpochAudit(audited.select(
       col("direction"),
@@ -205,7 +208,7 @@ final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
     timed("commit") {
       epoch.filter(_.version >= 0)
         .foreach(t => store.finalizeDelta(t.slice.target.table, t.version))
-      store.publishEpochAudit(auditKey, logTime.toLocalDateTime.toLocalDate)
+      store.publishEpochAudit(auditKey)
     }
   }
 

@@ -78,4 +78,20 @@ class DashboardSpec extends SparkSpec {
       assert(plan.contains("TakeOrderedAndProject"), filter)
     }
   }
+
+  test("an empty audit log still has its columns: pages and stats return no rows") {
+    val store = new SnapshotStore(spark, Files.createTempDirectory("graft-dash").toString)
+    Dashboard.registerViews(spark, store, Seq.empty)
+    assert(Dashboard.syncLog(spark).collect().isEmpty)
+    assert(Dashboard.syncLog(spark, Some("book")).collect().isEmpty)
+    assert(Dashboard.stats(spark).collect().isEmpty)
+    val a = store.audit()
+    val stats = Monitoring.tableStats(a)
+    assert(stats.collect().isEmpty)
+    assert(stats.columns.toSeq == Seq("direction", "table_name", "received", "success",
+      "loop_blocked", "target_not_found", "last_success_at", "last_error_at"))
+    val recent = Monitoring.recentSince(a, 50, java.sql.Date.valueOf("2026-01-13"))
+    assert(recent.collect().isEmpty)
+    assert(recent.columns.toSeq == SnapshotStore.auditSchema.fieldNames.toSeq)
+  }
 }

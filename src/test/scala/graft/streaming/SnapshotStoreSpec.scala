@@ -19,6 +19,24 @@ class SnapshotStoreSpec extends SparkSpec {
     (new SnapshotStore(spark, dir, compactEvery), dir)
   }
 
+  // scheduler jobs started while building (not running) a frame: a
+  // parquet read that infers its schema from footers starts one
+  private def jobsDuring(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      Thread.sleep(1000) // the listener bus is async
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   private def commit(store: SnapshotStore, rows: (Long, String, Int, String)*): Int =
     store.commitDelta("T", delta(rows: _*), "ID", "seq", Seq("VAL"))
 
@@ -61,7 +79,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(store.snapshot("T", null).as[(Int, String)].collect().toMap == before)
   }
 
-  test("manual compact folds the chain as a new version; audit compaction merges files") {
+  test("manual compact folds the chain as a new version") {
     val (store, dir) = newStore(compactEvery = 100)
     commit(store, (1L, "INSERT", 1, "a"))
     commit(store, (2L, "UPDATE", 1, "a2"))
@@ -69,22 +87,43 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(v == 3 && Files.exists(Paths.get(s"$dir/T/v3")))
     assert(store.compact("T") == 3) // already a base: no-op
     assert(store.snapshot("T", null).as[(Int, String)].collect().toMap == Map(1 -> "a2"))
+  }
 
-    import spark.implicits._
-    def audit(n: Int) = store.appendAudit(Seq.tabulate(n)(i =>
-      (s"op$i", java.sql.Timestamp.valueOf("2026-01-13 10:00:00")))
-      .toDF("operation", "log_time"))
-    audit(3); audit(2) // two appends ⇒ multiple files in the partition
-    def files() = {
-      val p = java.nio.file.Paths.get(s"$dir/_audit")
-      val s = Files.walk(p)
-      try s.filter(f => f.toString.endsWith(".parquet")).count()
-      finally s.close()
+  private def auditRows(n: Int, day: String) = Seq.tabulate(n)(i =>
+    ("ASIS_TO_TOBE", "T", "INSERT", i.toString, "SUCCESS", false, null: String,
+      s"h$i", java.sql.Timestamp.valueOf(s"$day 10:00:00")))
+    .toDF("direction", "table_name", "operation", "pk_value", "status",
+      "upsert_converted", "error_code", "change_hash", "log_time")
+
+  test("audit() reads a published log by the audit schema, starting no Spark job") {
+    val (store, dir) = newStore(compactEvery = 100)
+    store.appendAudit(auditRows(3, "2026-01-13"))
+    store.appendAudit(auditRows(2, "2026-01-13").union(auditRows(4, "2026-01-14")))
+    // one file per append and date, each moved under its date partition
+    val files = Seq("2026-01-13" -> 2, "2026-01-14" -> 1).map { case (d, n) =>
+      val s = Files.list(Paths.get(s"$dir/_audit/log_date=$d"))
+      try s.filter(_.toString.endsWith(".parquet")).count() -> n finally s.close()
     }
-    assert(files() > 1)
-    store.compactAudit()
-    assert(files() == 1, "expected one parquet file per date after compaction")
-    assert(store.audit().count() == 5)
+    assert(files.forall { case (got, want) => got == want }, files)
+    assert(jobsDuring(store.audit()) == 0)
+    val a = store.audit()
+    assert(a.schema == SnapshotStore.auditSchema)
+    assert(a.count() == 9)
+    assert(a.groupBy("log_date").count().as[(java.sql.Date, Long)].collect().toMap ==
+      Map(java.sql.Date.valueOf("2026-01-13") -> 5L, java.sql.Date.valueOf("2026-01-14") -> 4L))
+  }
+
+  test("appendAudit refuses a frame that is not on the audit schema") {
+    val (store, _) = newStore(compactEvery = 100)
+    val e = intercept[IllegalArgumentException](store.appendAudit(
+      Seq(("INSERT", java.sql.Timestamp.valueOf("2026-01-13 10:00:00")))
+        .toDF("operation", "log_time")))
+    assert(e.getMessage.contains("pk_value:string"), e.getMessage)
+    // a retyped column is refused as well
+    intercept[IllegalArgumentException](store.appendAudit(
+      auditRows(1, "2026-01-13").withColumn("upsert_converted",
+        org.apache.spark.sql.functions.lit("no"))))
+    assert(store.audit().count() == 0)
   }
 
   test("a crashed compaction's orphan base cannot shadow the next delta") {
@@ -217,23 +256,6 @@ class SnapshotStoreSpec extends SparkSpec {
         org.apache.spark.sql.types.IntegerType),
       org.apache.spark.sql.types.StructField("VAL",
         org.apache.spark.sql.types.StringType)))
-    // scheduler jobs started while building (not running) a frame: a
-    // parquet read that infers its schema from footers starts one
-    def jobsDuring(f: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        f
-        Thread.sleep(1000) // the listener bus is async
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
     assert(jobsDuring(store.snapshot("T", sch)) == 0)
     assert(jobsDuring(store.existingPks("T", sch, "ID")) == 0)
     // and the typed reads see the data
