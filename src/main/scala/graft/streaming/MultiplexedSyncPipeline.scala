@@ -51,9 +51,6 @@ final class MultiplexedSyncPipeline(
       source: DataFrame,
       pairs: Seq[(TableMapping, Direction.Value)],
       checkpoint: String): StreamingQuery = {
-    LoopDedupTws.configureSession(spark)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      MultiplexedSyncPipeline.shufflePartitions.toString)
     // spread the raw (topic, value) rows BEFORE the per-topic branches:
     // the map-side work (envelope parse + transform) otherwise runs on
     // the source's own partitioning — often one or two partitions per
@@ -74,8 +71,7 @@ final class MultiplexedSyncPipeline(
     }
     val union = branches.reduce(_.unionByName(_, allowMissingColumns = true))
       .withWatermark("event_ts", watermarkDelay)
-    val deduped = LoopDedupTws(union, ttlMs = loopTtlMs)
-    deduped.writeStream
+    val writer = LoopDedupTws(union, ttlMs = loopTtlMs).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -97,23 +93,40 @@ final class MultiplexedSyncPipeline(
             }, id)
         } finally { b.unpersist(); () }
       }
-      .start()
+    MultiplexedSyncPipeline.withQueryConf(spark)(writer.start())
   }
 }
 
 object MultiplexedSyncPipeline {
 
-  /** Shuffle/state partition count, SET on the session at
-    * [[MultiplexedSyncPipeline.start]] (the first micro-batch bakes it
-    * into the checkpoint, so it holds for the query's lifetime) and
-    * used to spread the source. A 5 s trigger's batch is small BY
-    * CONSTRUCTION, so per-trigger cost is dominated by fixed
-    * per-partition work — a state-store (RocksDB) load+commit per
-    * partition per trigger — not by data volume. The state operator
-    * carries the SUM of its pairs' trigger volume; 6 measured best for
-    * six ~4k-row topic slices per trigger on one node (12 paid more
-    * per-partition state fixed cost than the extra parallelism
-    * returned). On a cluster, size it to summed rows per trigger.
+  /** Shuffle/state partition count of the sync query (the first
+    * micro-batch bakes it into the checkpoint, so it holds for the
+    * query's lifetime), also used to spread the source. A 5 s
+    * trigger's batch is small BY CONSTRUCTION, so per-trigger cost is
+    * dominated by fixed per-partition work — a state-store (RocksDB)
+    * load+commit per partition per trigger — not by data volume. The
+    * state operator carries the SUM of its pairs' trigger volume; 6
+    * measured best for six ~4k-row topic slices per trigger on one node
+    * (12 paid more per-partition state fixed cost than the extra
+    * parallelism returned). On a cluster, size it to summed rows per
+    * trigger.
     */
   private[graft] val shufflePartitions = 6
+
+  /** Run `start` with [[LoopDedupTws.sessionConf]] and
+    * [[shufflePartitions]] set on `spark`, then restore (or unset) the
+    * caller's values; the query keeps them in the session clone it takes
+    * as it starts. One JVM-wide lock: concurrent starts never interleave.
+    */
+  private def withQueryConf[T](spark: SparkSession)(start: => T): T = synchronized {
+    val conf = LoopDedupTws.sessionConf :+
+      ("spark.sql.shuffle.partitions" -> shufflePartitions.toString)
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try start
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -10,47 +10,44 @@ import graft.cdc.Apply
   * for a MERGE-capable sink (Delta / JDBC MERGE in production, SURVEY
   * §2.8 ST5).
   *
-  * Two kinds of committed version, in one monotonically increasing
-  * sequence per table:
+  * The commit protocol. Versions form one increasing sequence per
+  * table; version N is a directory `v<N>` (a full BASE: an explicit
+  * [[commit]] or a fold), `d<N>` (a DELTA: one batch's raw change
+  * events `seq`, `operation`, pk, payload — O(|batch|), never
+  * O(|table|)), or both when an automatic fold wrote a base beside its
+  * delta. One writer, `writeVersion`, puts every version directory on
+  * disk, in one order: the parquet data, `_graft_schema` (the layout
+  * fingerprint), `_graft_ts` (the commit clock), then the optional
+  * `_graft_meta` (e.g. an epoch id). Nothing is visible until the
+  * `_current` pointer flips to N: that atomic small-file replace is the
+  * commit point (the read-version/write-new-version/commit protocol
+  * Delta uses, minus the transaction log), and a directory at N above
+  * the pointer is crash debris that the next write at N clears first.
+  * A version's markers are read from its delta first.
   *
-  *  - `v<N>`: a full BASE snapshot (an explicit [[commit]], or a
-  *    compaction).
-  *  - `d<N>`: a DELTA — the batch's raw change events (`seq`,
-  *    `operation`, pk, payload), appended by [[commitDelta]] in
-  *    O(|batch|), never O(|table|).
-  *
-  * A read at version V reconstructs `base ⊕ deltas`: the latest base
+  * A read at V goes through one resolver, `chainAt`: the newest base
   * `v<B>` with B ≤ V plus every delta in (B, V], replayed through
   * [[graft.cdc.Apply.applyBatch]] ordered by `(version, seq)` — the
-  * same per-key sequential semantics the apply path defines, so
-  * "commit the events, merge on read" and "merge then commit the
-  * snapshot" produce identical tables (applyBatch's last-INSERT/DELETE
-  * existence rule composes across batches). Every `compactEvery`-th
-  * commit folds the outstanding deltas into a new base, bounding both
-  * read fan-in and replay depth. Writes happen BEFORE the `_current`
-  * pointer flips, so a snapshot read never races a write (the
-  * read-version/write-new-version/commit protocol Delta uses, minus the
-  * transaction log). Replaying a crashed micro-batch appends a
-  * duplicate delta whose events are row-identical, which applyBatch's
-  * max_by/last-op semantics absorb — delta commits are
+  * apply path's own per-key semantics, so "commit the events, merge on
+  * read" and "merge then commit the snapshot" give identical tables.
+  * Every fold goes through one `folded`, which reconstructs by the
+  * table's kind; a chain `compactEvery` versions past its base folds at
+  * commit, before the flip, bounding read fan-in and replay depth. A
+  * replayed micro-batch appends a row-identical duplicate delta, which
+  * applyBatch's max_by/last-op semantics absorb: delta commits are
   * value-idempotent. Audit rows (CDC_SYNC_LOG, one schema:
   * [[SnapshotStore.auditSchema]]) reach `_audit` only through an epoch
   * stage + publish.
   *
-  * Scale: this is the fix for the full-snapshot-rewrite ceiling — per
-  * 5 s trigger the sink now writes O(|batch|) bytes; the O(|table|)
-  * cost moves to one columnar-pruned read (the apply's pk-membership
-  * check) and an amortized 1/compactEvery compaction write.
+  * Scale: per 5 s trigger the sink writes O(|batch|) bytes; the
+  * O(|table|) cost moves to one columnar-pruned membership read and an
+  * amortized 1/compactEvery fold.
   *
-  * All filesystem access (pointer/meta/fingerprint/horizon markers,
-  * version-dir lifecycle, audit publication) goes through
-  * the Hadoop [[FileSystem]] resolved from `basePath`'s scheme — the
-  * same seam as [[EpochCommit]] — so the store runs unchanged on
-  * HDFS-semantics storage. The commit points are an atomic small-file
-  * replace (`_current`, staged sibling + rename-with-overwrite) and a
-  * single rename (epoch audit publish): atomic on POSIX and HDFS;
-  * object stores without atomic rename need an HDFS-semantics tier or
-  * a transactional table format underneath, same constraint as
+  * All filesystem access goes through the Hadoop [[FileSystem]] of
+  * `basePath`'s scheme — the same seam as [[EpochCommit]]. The commit
+  * points (the pointer replace, the audit publish rename) are atomic on
+  * POSIX and HDFS; object stores without atomic rename need an
+  * HDFS-semantics tier or a transactional table format underneath, as
   * EpochCommit documents.
   */
 final class SnapshotStore(
@@ -159,6 +156,80 @@ final class SnapshotStore(
     */
   private def baseAtOrBefore(table: String, v: Int): Int =
     (v to 1 by -1).find(i => exists(baseDir(table, i))).getOrElse(0)
+
+  /** The one version writer (the protocol in the class doc): data, then
+    * `_graft_schema`, then `_graft_ts`, then the optional `_graft_meta`.
+    * It never flips the pointer; the caller's flip commits what it wrote.
+    */
+  private def writeVersion(dir: String, df: DataFrame, meta: Option[String]): Unit = {
+    df.write.mode(SaveMode.Overwrite).parquet(dir)
+    writeFingerprint(dir, df.schema)
+    writeCommitTs(dir)
+    meta.foreach(writeString(metaFile(dir), _))
+  }
+
+  /** A new base version `next`: clear its debris, write `df`, flip. */
+  private def commitBase(table: String, next: Int, df: DataFrame,
+      meta: Option[String]): Int = {
+    clearUncommitted(table, next)
+    writeVersion(baseDir(table, next), df, meta)
+    flipPointer(table, next)
+  }
+
+  /** Version `v`'s marker at `file(dir)`, the delta's copy first: an
+    * automatic fold writes its base beside the delta, and the delta's
+    * markers are the commit's own — one version, one answer.
+    */
+  private def marker(table: String, v: Int, file: String => String): Option[String] =
+    Seq(deltaDir(table, v), baseDir(table, v)).map(file).find(exists).map(readString)
+
+  /** The one chain resolver: version `v` is the newest base `v<B>` with
+    * B ≤ v plus every delta in (B, v]. Returns the base read (None
+    * before the first base) and the deltas as one read with a `__v`
+    * column (None when `v` is itself a base).
+    */
+  private def chainAt(table: String, v: Int): (Option[DataFrame], Option[DataFrame]) = {
+    val b = baseAtOrBefore(table, v)
+    (Option.when(b > 0)(readVersion(baseDir(table, b))),
+      Option.when(b < v)(readDeltas(table, b + 1, v)))
+  }
+
+  /** The one fold: `table` at version `v` (committed, or staged above
+    * the pointer) as a base frame, by the table's kind — CDC replay, or
+    * summed measures laid out one file per ~bucket when bucketed.
+    */
+  private def folded(table: String, v: Int): DataFrame = additiveCols(table) match {
+    case None => snapshotAt(table, v)
+    case Some(_) =>
+      val snap = additiveSnapshotAt(table, v, null)
+      bucketSpec(table) match {
+        case Some(s) => withBucket(snap, s)
+          .repartition(s._2, col("__bkt")).sortWithinPartitions(col("__bkt"))
+        case None => snap
+      }
+  }
+
+  /** The automatic fold, under the one fold-due rule: a chain
+    * `compactEvery` versions past its last base folds into a base beside
+    * the staged delta at `v`, before the flip (same version, same rows).
+    */
+  private def foldIfDue(table: String, v: Int): Unit =
+    if (v - baseAtOrBefore(table, v - 1) >= compactEvery)
+      writeVersion(baseDir(table, v), folded(table, v), None)
+
+  /** A manual fold: the current chain as a base at a NEW version. No-op
+    * at v0 or when the tip is a base. The tip's `_graft_meta` carries
+    * forward: a fold changes the table's representation, not its stream
+    * position, and a restart right after it must still see the last
+    * applied epoch (else a sink's replay guard re-applies it and
+    * duplicates audit rows, and a gate's whole-batch replay
+    * double-charges).
+    */
+  private def foldAsNext(table: String): Int = {
+    val v = currentVersion(table)
+    if (v == 0 || baseAtOrBefore(table, v) == v) v
+    else commitBase(table, v + 1, folded(table, v), marker(table, v, metaFile))
+  }
 
   // ---- schema-evolution contract ----------------------------------
   //
@@ -345,17 +416,16 @@ final class SnapshotStore(
 
   private def tsFile(dir: String) = s"$dir/_graft_ts"
 
+  private def metaFile(dir: String) = s"$dir/_graft_meta"
+
   private def writeCommitTs(dir: String): Unit =
     writeString(tsFile(dir), clock().toString)
 
   /** Commit wall-clock (epoch millis) of a live version, if recorded
-    * (versions written before timestamp stamping existed have none; a
-    * fold writes its base at the delta's version, so the delta marker
-    * is checked first — one version, one instant).
+    * (versions written before timestamp stamping existed have none).
     */
   def versionTimestamp(table: String, v: Int): Option[Long] =
-    Seq(deltaDir(table, v), baseDir(table, v)).map(tsFile).find(exists)
-      .flatMap(p => scala.util.Try(readString(p).trim.toLong).toOption)
+    marker(table, v, tsFile).flatMap(s => scala.util.Try(s.trim.toLong).toOption)
 
   /** The latest version committed at or before `tsMillis` (0 = before
     * the table's first commit). Refuses when the answer sits below the
@@ -417,28 +487,25 @@ final class SnapshotStore(
     require(version >= horizon(table),
       s"snapshotAt: v$version is below the vacuum horizon v${horizon(table)} " +
         s"of $table — its history was reclaimed")
-    val b = baseAtOrBefore(table, version)
-    if (b == version) {
-      val base = readVersion(baseDir(table, b))
-      return if (schema == null) base else withMissingAsNull(base, schema.fields.toSeq)
+    chainAt(table, version) match {
+      case (base, None) => // the version is itself a base
+        if (schema == null) base.get else withMissingAsNull(base.get, schema.fields.toSeq)
+      case (base, Some(deltas)) =>
+        // delta layout contract (commitDelta): [seqCol, operation, pk,
+        // data…] — uniform across the segment (stageDelta forces a
+        // compaction boundary at any layout change)
+        val fields = deltas.schema.fields.filterNot(_.name == "__v")
+        val seqCol = fields(0).name
+        val pk = fields(2).name
+        val dataCols = fields.drop(3).map(_.name).toSeq
+        val start = base.getOrElse(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          if (schema != null) schema else StructType(fields.drop(2))))
+        // a pre-evolution base lacks columns added later in the chain
+        val reconciled = withMissingAsNull(start, fields.drop(3).toSeq)
+        val ordered = deltas.withColumn("__ord", struct(col("__v"), col(seqCol)))
+        Apply.applyBatch(reconciled, ordered, pk, "__ord", dataCols).target
     }
-    val deltas = readDeltas(table, b + 1, version)
-    // delta layout contract (commitDelta): [seqCol, operation, pk, data…]
-    // — uniform across the segment (stageDelta forces a compaction
-    // boundary at any layout change)
-    val fields = deltas.schema.fields.filterNot(_.name == "__v")
-    val seqCol = fields(0).name
-    val pk = fields(2).name
-    val dataCols = fields.drop(3).map(_.name).toSeq
-    val base =
-      if (b == 0) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        if (schema != null) schema else StructType(fields.drop(2)))
-      else readVersion(baseDir(table, b))
-    // a pre-evolution base lacks columns added later in the chain
-    val reconciled = withMissingAsNull(base, fields.drop(3).toSeq)
-    val ordered = deltas.withColumn("__ord", struct(col("__v"), col(seqCol)))
-    Apply.applyBatch(reconciled, ordered, pk, "__ord", dataCols).target
   }
 
   /** Change data feed (the lakehouse CDF analog): every change EVENT
@@ -613,18 +680,15 @@ final class SnapshotStore(
       case None => df
     }
     if (version == 0) return (None, None)
-    val b = baseAtOrBefore(table, version)
-    val base =
-      if (b == 0) None
-      else Some(bounded(readVersion(baseDir(table, b)), pkName).select(key(col(pkName)): _*))
-    if (b == version) return (base, None)
-    val all = readDeltas(table, b + 1, version)
-    // delta layout contract (commitDelta): [seqCol, operation, pk, data…]
-    val f = all.schema.fields.filterNot(_.name == "__v")
-    val deltas = bounded(all, f(2).name).select(key(col(f(2).name)) ++ Seq(
-      col(f(1).name).as("__op"),
-      struct(col("__v"), col(f(0).name).as("__seq")).as("__ord")): _*)
-    (base, Some(deltas))
+    val (base, deltas) = chainAt(table, version)
+    (base.map(bounded(_, pkName).select(key(col(pkName)): _*)),
+      deltas.map { all =>
+        // delta layout contract (commitDelta): [seqCol, operation, pk, data…]
+        val f = all.schema.fields.filterNot(_.name == "__v")
+        bounded(all, f(2).name).select(key(col(f(2).name)) ++ Seq(
+          col(f(1).name).as("__op"),
+          struct(col("__v"), col(f(0).name).as("__seq")).as("__ord")): _*)
+      })
   }
 
   /** The existence rule, written once for any key: per key, the last
@@ -654,34 +718,20 @@ final class SnapshotStore(
     }
   }
 
-  /** Write a full base snapshot version and flip the pointer. `meta`
-    * (e.g. a streaming epoch id) lands INSIDE the version directory
-    * before the pointer flips, so version and marker commit atomically
-    * — the underscore prefix keeps parquet reads blind to it.
+  /** Commit `df` as a full base at a new version, `meta` (e.g. a
+    * streaming epoch id) as its marker.
     */
   def commit(table: String, df: DataFrame, meta: Option[String] = None): Int = {
     // symmetric with the reader guards: a full-base rewrite into an
     // additive chain would silently mix kinds mid-history — the next
     // additiveSnapshot would treat CDC payload rows as multiplicities
     refuseAdditive(table, "commit")
-    val next = currentVersion(table) + 1
-    clearUncommitted(table, next)
-    df.write.mode(SaveMode.Overwrite).parquet(baseDir(table, next))
-    writeFingerprint(baseDir(table, next), df.schema)
-    writeCommitTs(baseDir(table, next))
-    meta.foreach(m => writeString(s"${baseDir(table, next)}/_graft_meta", m))
-    flipPointer(table, next)
+    commitBase(table, currentVersion(table) + 1, df, meta)
   }
 
   /** The current version's commit marker, if any (delta or base). */
-  def currentMeta(table: String): Option[String] = {
-    val v = currentVersion(table)
-    if (v == 0) None
-    else Seq(deltaDir(table, v), baseDir(table, v))
-      .map(d => s"$d/_graft_meta")
-      .find(exists)
-      .map(readString)
-  }
+  def currentMeta(table: String): Option[String] =
+    marker(table, currentVersion(table), metaFile)
 
   /** Append one batch of change events as a delta version — O(|batch|).
     *
@@ -713,30 +763,27 @@ final class SnapshotStore(
     val selected = changes.select((Seq(seqCol, "operation", pk) ++ dataCols).map(col): _*)
     val incoming = selected.schema.fields.toSeq
       .map(f => f.name -> f.dataType.catalogString)
-    // schema-evolution gate (two tiny marker-file reads, no Spark):
-    // a layout change against the outstanding chain forces a compaction
-    // boundary; a change that loses base columns refuses loudly
+    // schema-evolution gate (one pointer read, one base probe, marker
+    // reads, no Spark): a layout change against the outstanding chain
+    // forces a compaction boundary; losing base columns refuses loudly
     val v = currentVersion(table)
-    val outstanding = v > baseAtOrBefore(table, v)
-    if (outstanding && readFingerprint(deltaDir(table, v))
-        .exists(checkDeltaEvolution(table, _, incoming)))
-      compact(table) // old-schema chain folds; segment stays uniform
-    val base = baseAtOrBefore(table, currentVersion(table))
+    val b = baseAtOrBefore(table, v)
+    val (tip, base) =
+      if (v > b && readFingerprint(deltaDir(table, v))
+          .exists(checkDeltaEvolution(table, _, incoming))) {
+        val boundary = compact(table) // old-schema chain folds; segment stays uniform
+        (boundary, boundary)
+      } else (v, b)
     if (base > 0)
       readFingerprint(baseDir(table, base))
         .foreach(checkBaseCompat(table, _, incoming))
-    val next = currentVersion(table) + 1
+    val next = tip + 1
     clearUncommitted(table, next)
     // repartition, not coalesce: coalesce(1) would drag the upstream
     // parse/transform into a single task; a round-robin shuffle of a
     // trigger-bounded batch is trivial and keeps the source parallel
-    selected
-      .repartition(deltaWriteParts)
-      .write.mode(SaveMode.Overwrite).parquet(deltaDir(table, next))
-    writeFingerprint(deltaDir(table, next), selected.schema)
+    writeVersion(deltaDir(table, next), selected.repartition(deltaWriteParts), meta)
     writeString(deltaLayoutFile(table), fpString(selected.schema))
-    writeCommitTs(deltaDir(table, next))
-    meta.foreach(m => writeString(s"${deltaDir(table, next)}/_graft_meta", m))
     next
   }
 
@@ -746,11 +793,7 @@ final class SnapshotStore(
     */
   def finalizeDelta(table: String, staged: Int): Int = {
     refuseAdditive(table, "finalizeDelta") // direct calls bypass stageDelta's guard
-    if (staged - baseAtOrBefore(table, staged - 1) >= compactEvery) {
-      val snap = snapshotAt(table, staged) // d<staged> exists; pointer not yet flipped
-      snap.write.mode(SaveMode.Overwrite).parquet(baseDir(table, staged))
-      writeFingerprint(baseDir(table, staged), snap.schema)
-    }
+    foldIfDue(table, staged)
     flipPointer(table, staged)
   }
 
@@ -763,42 +806,25 @@ final class SnapshotStore(
   /** Manual compaction — fold the current delta chain into a base NOW
     * (maintenance hook; the automatic path folds every `compactEvery`
     * commits). Runs as a NEW version so the pointer-flip protocol keeps
-    * readers off the partially-written base. No-op at v0 or when the
-    * current version already is a base.
+    * readers off the partially-written base; the epoch marker carries
+    * forward. No-op at v0 or when the current version already is a
+    * base; refuses an additive chain (use [[compactAdditive]]), as
+    * [[commit]] does.
     *
     * Single-writer assumption (same as every committing entry point):
     * not safe concurrent with an in-flight [[commit]]/[[commitDelta]]
     * on the same table — both would claim version `v+1`. Run it on a
     * quiesced table.
-    *
-    * The current version's `_graft_meta` epoch marker carries forward
-    * into the new base: compaction changes the table's representation,
-    * not its stream position, so a crash-restart right after a manual
-    * compact must still see the last applied epoch (else the replay
-    * guard re-applies it and duplicates audit rows).
     */
   def compact(table: String): Int = {
-    val v = currentVersion(table)
-    if (v == 0 || baseAtOrBefore(table, v) == v) v
-    else {
-      val next = v + 1
-      val meta = currentMeta(table)
-      clearUncommitted(table, next)
-      val snap = snapshotAt(table, v)
-      snap.write.mode(SaveMode.Overwrite).parquet(baseDir(table, next))
-      writeFingerprint(baseDir(table, next), snap.schema)
-      writeCommitTs(baseDir(table, next))
-      meta.foreach(m => writeString(s"${baseDir(table, next)}/_graft_meta", m))
-      flipPointer(table, next)
-    }
+    refuseAdditive(table, "compact")
+    foldAsNext(table)
   }
 
   /** Manual fold of an ADDITIVE chain — [[compact]]'s sibling (compact
     * itself refuses additive tables: CDC reconstruction would misparse
     * them). Writes the aggregated state as a delta-free base at a new
-    * version; content-preserving, meta carried forward (the gates read
-    * the latest meta as their replay fence — dropping it here would
-    * make the next whole-batch replay double-charge). Beyond chain
+    * version; content-preserving, meta carried forward. Beyond chain
     * hygiene this is a SCAN-SHAPE op: a bucketed chain's fold writes
     * one file per ~bucket (`repartition(n, __bkt)` + sort), so the
     * per-trigger state read parallelizes across n tasks instead of
@@ -806,27 +832,10 @@ final class SnapshotStore(
     * measured the single-file layout costing 3.4× (204 vs ~700 docs/s).
     */
   def compactAdditive(table: String): Int = {
-    val v = currentVersion(table)
     additiveCols(table).getOrElse(throw new IllegalStateException(
       s"compactAdditive: table '$table' is not an additive chain — " +
         "use compact()"))
-    if (v == 0 || baseAtOrBefore(table, v) == v) v
-    else {
-      val next = v + 1
-      val meta = currentMeta(table)
-      clearUncommitted(table, next)
-      val snap = additiveSnapshotAt(table, v, null)
-      val base = bucketSpec(table) match {
-        case Some(s) => withBucket(snap, s)
-          .repartition(s._2, col("__bkt")).sortWithinPartitions(col("__bkt"))
-        case None => snap.repartition(deltaWriteParts)
-      }
-      base.write.mode(SaveMode.Overwrite).parquet(baseDir(table, next))
-      writeFingerprint(baseDir(table, next), base.schema)
-      writeCommitTs(baseDir(table, next))
-      meta.foreach(m => writeString(s"${baseDir(table, next)}/_graft_meta", m))
-      flipPointer(table, next)
-    }
+    foldAsNext(table)
   }
 
   /** Clone `table`@`version` as a NEW table `dest` (optionally in
@@ -875,7 +884,7 @@ final class SnapshotStore(
         .map { case (d, kind) =>
           val files = fs.listStatus(new Path(d)).filter(st =>
             st.isFile && st.getPath.getName.endsWith(".parquet"))
-          val metaP = s"$d/_graft_meta"
+          val metaP = metaFile(d)
           (v, kind, if (exists(metaP)) readString(metaP) else null,
             files.length, files.map(_.getLen).sum, v >= h, ts)
         }
@@ -965,14 +974,11 @@ final class SnapshotStore(
   // multiplicity; MULTIPLE measures make the kind carry any
   // sufficient-statistic rollup whose merge is addition — e.g. an
   // aggregate view's per-group (state_cnt, state_qsum) pair
-  // ([[JoinAggView]]). Every `compactEvery`-th commit folds the chain
-  // into an aggregated base, bounding read fan-in.
-  // This is the counting-IVM backing [[JoinView]] needs: its per-
-  // trigger O(|state|) state-merge rewrite becomes a delta append,
-  // while replay safety keeps the same shape as commitDelta (atomic
-  // pointer flip per version; the caller's per-table batch-id meta
-  // gates replays, and debris from a crash before the flip is cleared
-  // at the next attempt).
+  // ([[JoinAggView]]). It commits and folds by the same protocol as
+  // the CDC kind (the class doc); the caller's per-table batch-id meta
+  // gates replays. This is the counting-IVM backing [[JoinView]] needs:
+  // its per-trigger O(|state|) state-merge rewrite becomes a delta
+  // append.
 
   private def kindFile(table: String) = s"${tableDir(table)}/_graft_kind"
 
@@ -1086,42 +1092,27 @@ final class SnapshotStore(
     val incoming = staged.schema.fields.toSeq
       .map(f => f.name -> f.dataType.catalogString)
     val v = currentVersion(table)
-    if (v > 0)
-      Seq(deltaDir(table, v), baseDir(table, v)).find(exists)
-        .flatMap(readFingerprint).foreach { prev =>
-          if (prev != incoming) throw new IllegalStateException(
-            s"Additive table '$table' layout drift: chain has " +
-              s"${prev.map(_._1).mkString(", ")}; incoming " +
-              s"${incoming.map(_._1).mkString(", ")}. Additive chains " +
-              "must keep one exact layout; rewrite the table explicitly " +
-              "for schema changes.")
-        }
+    marker(table, v, schemaFile).map(parseFp).foreach { prev =>
+      if (prev != incoming) throw new IllegalStateException(
+        s"Additive table '$table' layout drift: chain has " +
+          s"${prev.map(_._1).mkString(", ")}; incoming " +
+          s"${incoming.map(_._1).mkString(", ")}. Additive chains " +
+          "must keep one exact layout; rewrite the table explicitly " +
+          "for schema changes.")
+    }
     val next = v + 1
     clearUncommitted(table, next)
     // bucketed chains cluster + sort by __bkt so every file covers few
     // buckets and its row-group stats carry tight __bkt ranges — what
     // the forKeys IN-filter prunes on
-    (spec match {
+    writeVersion(deltaDir(table, next), spec match {
       case Some(_) => staged.repartition(deltaWriteParts, col("__bkt"))
         .sortWithinPartitions(col("__bkt"))
       case None => staged.repartition(deltaWriteParts)
-    }).write.mode(SaveMode.Overwrite).parquet(deltaDir(table, next))
-    writeFingerprint(deltaDir(table, next), staged.schema)
-    writeCommitTs(deltaDir(table, next))
-    meta.foreach(m => writeString(s"${deltaDir(table, next)}/_graft_meta", m))
-    if (next - baseAtOrBefore(table, v) >= compactEvery) {
-      // fold BEFORE the flip: d<next> exists on disk, so the aggregated
-      // base at the same version includes it (mirrors finalizeDelta)
-      val snap = additiveSnapshotAt(table, next, delta.schema)
-      val base = spec match {
-        // the base is where pruning pays: one file per ~bucket
-        case Some(s) => withBucket(snap, s)
-          .repartition(s._2, col("__bkt")).sortWithinPartitions(col("__bkt"))
-        case None => snap
-      }
-      base.write.mode(SaveMode.Overwrite).parquet(baseDir(table, next))
-      writeFingerprint(baseDir(table, next), base.schema)
-    }
+    }, meta)
+    // fold BEFORE the flip: d<next> exists on disk, so the base at the
+    // same version includes it
+    foldIfDue(table, next)
     flipPointer(table, next)
   }
 
@@ -1172,13 +1163,8 @@ final class SnapshotStore(
     require(version >= horizon(table),
       s"additiveSnapshotAt: v$version is below the vacuum horizon " +
         s"v${horizon(table)} of $table — its history was reclaimed")
-    val b = baseAtOrBefore(table, version)
-    val base =
-      if (b == 0) None else Some(readVersion(baseDir(table, b)))
-    val deltas =
-      if (b == version) None
-      else Some(readDeltas(table, b + 1, version).drop("__v"))
-    val raw = (base.toSeq ++ deltas.toSeq).reduce(_ unionByName _)
+    val (base, deltas) = chainAt(table, version)
+    val raw = (base.toSeq ++ deltas.map(_.drop("__v"))).reduce(_ unionByName _)
     // __bkt is layout, not payload: derived at write, dropped on read
     val payload = raw.columns.filterNot(measures.contains)
       .filterNot(_ == "__bkt")

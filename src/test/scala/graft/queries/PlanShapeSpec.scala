@@ -132,7 +132,7 @@ class PlanShapeSpec extends SparkSpec {
     // walk the plan OUTSIDE broadcast subtrees: no shuffle/sort/agg/
     // window may touch the corpus-sized side
     def corpusSide(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = p match {
-      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => Nil
+      case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => Nil
       case other => other.nodeName +: other.children.flatMap(corpusSide)
     }
     val names = corpusSide(inner)

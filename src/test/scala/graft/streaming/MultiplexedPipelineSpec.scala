@@ -5,6 +5,7 @@ import graft.cdc.{Direction, Registry, TableMapping}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** One streaming query carrying all six (mapping, direction) topics:
   * the consolidated topology must apply each topic's slice exactly like
@@ -125,5 +126,40 @@ class MultiplexedPipelineSpec extends SparkSpec {
         .getAs[java.sql.Timestamp]("CREATED_AT")
       assert(created.getNanos == 123456000, s"CREATED_AT lost precision: $created")
     } finally q.stop()
+  }
+
+  test("start leaves the caller's session settings as they were; the query keeps its own") {
+    val dir = Files.createTempDirectory("graft-mux-conf").toString
+    val store = new SnapshotStore(spark, s"$dir/store")
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val width = "spark.sql.shuffle.partitions"
+    val saved = Seq(provider, changelog, width).map(k => k -> spark.conf.getOption(k))
+    spark.conf.unset(provider)
+    spark.conf.set(changelog, "false")
+    val before = saved.map { case (k, _) => spark.conf.getOption(k) }
+    val mem = MemoryStream[(String, String)](spark)
+    val q = new MultiplexedSyncPipeline(spark, store,
+      trigger = Trigger.ProcessingTime("0 seconds"))
+      .start(mem.toDF().toDF("topic", "value"),
+        Seq((Registry.book, Direction.AsisToTobe)), s"$dir/ckpt")
+    try {
+      assert(saved.map { case (k, _) => spark.conf.getOption(k) } == before,
+        "start must restore the caller's settings")
+      mem.addData(Registry.topicFor(Direction.AsisToTobe, Registry.book) ->
+        env("ASIS_USER", "BOOK_INFO", "c", bookAsis(1, "b-one"), t0))
+      q.processAllAvailable()
+      assert(store.snapshot("TB_BOOK", null).count() == 1)
+      val op = q.recentProgress.filter(_.numInputRows > 0).last.stateOperators(0)
+      assert(op.numShufflePartitions == MultiplexedSyncPipeline.shufflePartitions)
+      assert(op.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")),
+        s"the query must run on the RocksDB provider: ${op.customMetrics.keySet}")
+    } finally {
+      q.stop()
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 }

@@ -109,6 +109,24 @@ class PerTriggerJobSpec extends SparkSpec {
     assert(store.audit().filter($"status" === "TARGET_NOT_FOUND").count() == 10)
   }
 
+  test("the fold epoch runs 3 actions: delta stage, audit stage, fold write") {
+    val dir = Files.createTempDirectory("graft-ptj").toString
+    val (pipeline, store) = fixture(dir) // the default compactEvery of 8
+    val t0 = 1768284000000L
+    def epoch(k: Int) = book(batchOf(pipeline,
+      (k * 10 + 1 to k * 10 + 10).map(i => envelope("c", i, s"t$i", t0 + i))))
+    (0 until 7).foreach(k => pipeline.applyMicroBatch(epoch(k), batchId = k.toLong))
+    assert(store.currentVersion("TB_BOOK") == 7)
+    val n = actionsDuring(pipeline.applyMicroBatch(epoch(7), batchId = 7L))
+    assert(n == 3, s"the fold epoch stages the delta, stages the audit and writes the fold, saw $n")
+    assert(store.currentVersion("TB_BOOK") == 8)
+    assert(Files.isDirectory(java.nio.file.Paths.get(s"$dir/store/TB_BOOK/v8")),
+      "the eighth version must leave a folded base")
+    val snap = store.snapshot("TB_BOOK", null)
+    assert(snap.count() == 80)
+    assert(snap.select($"TITLE").as[String].collect().toSet == (1 to 80).map(i => s"t$i").toSet)
+  }
+
   test("exactly-once across the finalize/publish crash window") {
     val (pipeline, store) = fixture()
     val t0 = 1768284000000L
