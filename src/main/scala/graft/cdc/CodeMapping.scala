@@ -1,12 +1,11 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-/** The SYNC_CODE_MAPPING dimension (FIXTURES.md §4;
+/** The SYNC_CODE_MAPPING rows (FIXTURES.md §4;
   * `poc/asis-oracle/init/03_create_mapping_tables.sql:24-35`).
   *
-  * ≤ 25 rows — always broadcast. At 100 TB the fact side streams through
-  * a broadcast hash join with no shuffle.
+  * ≤ 25 rows: [[Transform]] carries each (map group, source system)
+  * slice as a map literal in its projection, the way the reference's
+  * `FN_CONVERT_CODE` is a scalar lookup, not a join.
   */
 object CodeMapping {
 
@@ -31,9 +30,4 @@ object CodeMapping {
     CodeRow("MEMBER_TYPE_MAP", "TOBE", "ADMIN", "A"),
     CodeRow("MEMBER_TYPE_MAP", "TOBE", "USER", "B"),
     CodeRow("MEMBER_TYPE_MAP", "TOBE", "GUEST", "C"))
-
-  def dim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    defaultRows.toDF()
-  }
 }

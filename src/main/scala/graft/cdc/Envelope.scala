@@ -24,7 +24,7 @@ import graft.functions.DebeziumDecimalDecode.debezium_decimal
   * StringType field, which is exactly the tolerance we need for the
   * decimal struct variant — then each column is normalized per its
   * declared wire type. Everything is native expressions (from_json,
-  * get_json_object, when/cascade, the custom debezium_decimal), so the
+  * when/cascade, the custom debezium_decimal), so the
   * whole normalize stage stays inside whole-stage codegen and is a
   * narrow (no-shuffle) transformation at any scale.
   */
@@ -57,13 +57,10 @@ object Envelope {
       .otherwise(timestamp_millis(asLong))
   }
 
-  /** All-string schema for one table side's image. */
-  def rawImageSchema(side: TableSide): StructType =
-    StructType(side.columnNames.map(StructField(_, StringType)))
-
-  /** Envelope schema: op/ts_ms/source plus raw-string images. */
-  def envelopeSchema(side: TableSide): StructType = {
-    val img = rawImageSchema(side)
+  /** Envelope schema: op/ts_ms/source plus `before`/`after` images of
+    * type `img`.
+    */
+  private def envelopeSchema(img: DataType): StructType =
     StructType(Seq(
       StructField("op", StringType),
       StructField("ts_ms", LongType),
@@ -72,15 +69,6 @@ object Envelope {
         StructField("table", StringType)))),
       StructField("before", img),
       StructField("after", img)))
-  }
-
-  /** Unwrap the payload whether or not a {"schema":…, "payload":…}
-    * wrapper is present (`CdcKafkaConsumer.java:170-174`).
-    */
-  def payloadJson(value: Column): Column = {
-    val wrapped = get_json_object(value, "$.payload")
-    coalesce(wrapped, value)
-  }
 
   /** Normalize one raw-string image column to its engine type. */
   def normalizeColumn(img: Column, name: String, wt: WireType): Column = {
@@ -97,18 +85,18 @@ object Envelope {
     }
   }
 
-  /** Parse raw Kafka-shaped records (`value` string column) for one table
-    * side into normalized CDC events:
-    * operation, ts, source_schema, source_table, change_hash, <data cols…>.
-    *
-    * ONE `from_json` pass handles both envelope shapes: the schema is a
-    * superset (top-level fields AND a `payload` wrapper); whichever
-    * half parsed non-null wins. Corrupt / unparseable payloads yield
-    * null images and are dropped, matching the reference's
-    * skip-on-parse-failure (`CdcKafkaConsumer.java:213-216`).
+  /** The one envelope unwrap both parsers share: the `from_json` of
+    * `value` against a superset schema (the envelope's top-level fields
+    * AND a `{"schema":…, "payload":…}` wrapper,
+    * `CdcKafkaConsumer.java:170-174`) — whichever half parsed non-null
+    * wins; the op decode; `source_ts` / `source_schema` /
+    * `source_table`; the image rule as `_img`; and the null filter.
+    * Corrupt / unparseable payloads yield null images and are dropped,
+    * matching the reference's skip-on-parse-failure
+    * (`CdcKafkaConsumer.java:213-216`).
     */
-  def parse(raw: DataFrame, side: TableSide): DataFrame = {
-    val envSchema = envelopeSchema(side)
+  private def unwrap(raw: DataFrame, img: DataType): DataFrame = {
+    val envSchema = envelopeSchema(img)
     val outer = StructType(envSchema.fields :+ StructField("payload", envSchema))
     // opaque(): optimizer barrier so the wide from_json runs ONCE per
     // row — without it, project-collapse + per-field JSON pruning
@@ -119,14 +107,13 @@ object Envelope {
     // two full parses per row in the shipped plan. Building the
     // coalesce from attribute references parses exactly once.
     val parsed = graft.functions.ArrayHashes.opaque(from_json(col("value"), outer))
-    val withEnv = raw
-      .withColumn("_parsed", parsed)
+    raw.withColumn("_parsed", parsed)
       .withColumn("_env",
         when(col("_parsed.payload").isNotNull, col("_parsed.payload"))
           .otherwise(struct(envSchema.fieldNames.map(n =>
             col("_parsed").getField(n).as(n)): _*)))
       .withColumn("op", col("_env.op"))
-      .withColumn("operation", decodeOp(col("_env.op")))
+      .withColumn("operation", decodeOp(col("op")))
       .withColumn("source_ts", timestamp_millis(col("_env.ts_ms")))
       .withColumn("source_schema", col("_env.source.schema"))
       .withColumn("source_table", col("_env.source.table"))
@@ -134,13 +121,23 @@ object Envelope {
       .withColumn("_img",
         when(col("operation") === "DELETE", col("_env.before")).otherwise(col("_env.after")))
       .filter(col("_env").isNotNull && col("op").isNotNull && col("_img").isNotNull)
+  }
 
+  private def metaCols =
+    Seq("operation", "source_ts", "source_schema", "source_table").map(col)
+
+  /** Parse raw Kafka-shaped records (`value` string column) for one table
+    * side into normalized CDC events:
+    * operation, source_ts, source_schema, source_table, <data cols…>.
+    * Images parse with an all-`StringType` schema, then each column is
+    * normalized per its declared wire type.
+    */
+  def parse(raw: DataFrame, side: TableSide): DataFrame = {
     val dataCols = side.columns.map { case (n, wt) =>
       normalizeColumn(col("_img"), n, wt).as(n)
     }
-    val metaCols = Seq(
-      col("operation"), col("source_ts"), col("source_schema"), col("source_table"))
-    withEnv.select(metaCols ++ dataCols: _*)
+    unwrap(raw, StructType(side.columnNames.map(StructField(_, StringType))))
+      .select(metaCols ++ dataCols: _*)
   }
 
   // ---- generic schemaless path (SURVEY §1.3) ------------------------------
@@ -151,21 +148,6 @@ object Envelope {
     * already-uppercased keys.
     */
   val temporalNamePattern = "DATE|TIME|_AT$"
-
-  /** Envelope schema with `MapType(String,String)` images — any table
-    * shape parses without registration.
-    */
-  def schemalessEnvelopeSchema: StructType = {
-    val img = MapType(StringType, StringType)
-    StructType(Seq(
-      StructField("op", StringType),
-      StructField("ts_ms", LongType),
-      StructField("source", StructType(Seq(
-        StructField("schema", StringType),
-        StructField("table", StringType)))),
-      StructField("before", img),
-      StructField("after", img)))
-  }
 
   /** Parse envelopes from an UNREGISTERED topic (the reference's Java
     * layer is fully schemaless, `CdcSyncService.java:140-166`): same
@@ -178,31 +160,8 @@ object Envelope {
     * acceptable for the compat fallback path, which exists so an unknown
     * table syncs at all; registered tables take the codegen'd `parse`.
     */
-  def parseSchemaless(raw: DataFrame): DataFrame = {
-    val envSchema = schemalessEnvelopeSchema
-    val outer = StructType(envSchema.fields :+ StructField("payload", envSchema))
-    // Parse ONCE into its own opaque-guarded column, then build the
-    // wrapper-coalesce from attribute references (round 16): with the
-    // opaque around the COMBINED when/otherwise, the from_json child was
-    // still textually duplicated inside it — the condition and the then
-    // branch each re-parsed the document (2 full JSON parses per row,
-    // visible in the round-15 plan). The opaque sits on the parse
-    // itself now, so project-collapse can't inline it into its three
-    // downstream references and every row parses exactly once.
-    val parsed = graft.functions.ArrayHashes.opaque(from_json(col("value"), outer))
-    raw.withColumn("_parsed", parsed)
-      .withColumn("_env",
-        when(col("_parsed.payload").isNotNull, col("_parsed.payload"))
-          .otherwise(struct(envSchema.fieldNames.map(n =>
-            col("_parsed").getField(n).as(n)): _*)))
-      .withColumn("op", col("_env.op"))
-      .withColumn("operation", decodeOp(col("op")))
-      .withColumn("source_ts", timestamp_millis(col("_env.ts_ms")))
-      .withColumn("source_schema", col("_env.source.schema"))
-      .withColumn("source_table", col("_env.source.table"))
-      .withColumn("_imgraw",
-        when(col("operation") === "DELETE", col("_env.before")).otherwise(col("_env.after")))
-      .filter(col("_env").isNotNull && col("op").isNotNull && col("_imgraw").isNotNull)
+  def parseSchemaless(raw: DataFrame): DataFrame =
+    unwrap(raw, MapType(StringType, StringType))
       // opaque: the interpreted map HOFs below are re-evaluated per
       // downstream REFERENCE when project-collapse inlines them — a
       // consumer extracting four fields re-ran transform_keys four
@@ -210,11 +169,9 @@ object Envelope {
       // cdc2 spent more re-evaluating the maps than parsing the JSON).
       // The barrier pins each map to one evaluation per row.
       .withColumn("image", graft.functions.ArrayHashes.opaque(
-        transform_keys(col("_imgraw"), (k, _) => upper(k))))
+        transform_keys(col("_img"), (k, _) => upper(k))))
       .withColumn("image_ts", graft.functions.ArrayHashes.opaque(transform_values(
         map_filter(col("image"), (k, _) => k.rlike(temporalNamePattern)),
         (_, v) => epochAuto(v))))
-      .select(col("operation"), col("source_ts"), col("source_schema"),
-        col("source_table"), col("image"), col("image_ts"))
-  }
+      .select(metaCols ++ Seq(col("image"), col("image_ts")): _*)
 }

@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
   * The reference implements these per table in PL/SQL stage-1 workers
   * (`tobe-oracle/init/04_create_procedures.sql:159-172` etc.); here one
   * generated `select` per TableMapping covers every kind:
-  * Direct=rename, CodeMapped=broadcast join + COALESCE fallback,
+  * Direct=rename, CodeMapped=literal map lookup + COALESCE fallback,
   * YnToBit/BitToYn=CASE, CastTimestamp/CastDate=cast+NVL, DefaultLit /
-  * DefaultNow=literals, drop=absence. Code-map lookups become one
-  * broadcast hash join per (source column, map group) — the dimension is
-  * ≤ 25 rows, so at scale this is shuffle-free map-side work.
+  * DefaultNow=literals, drop=absence. A code map is ≤ 25 rows, so it
+  * rides in the plan as a map literal — the reference's scalar
+  * `FN_CONVERT_CODE` (`asis…03_create_mapping_tables.sql:40-59`), not a
+  * join: the transform is one narrow projection.
   */
 object Transform {
 
@@ -24,35 +25,22 @@ object Transform {
       events: DataFrame,
       mapping: TableMapping,
       direction: Direction.Value,
-      codeDim: DataFrame,
       now: Column = current_timestamp()): DataFrame = {
 
     val specs = mapping.specsFor(direction)
     require(specs.nonEmpty, s"${mapping.entity} does not sync in $direction")
     val sys = Direction.sourceSystem(direction)
 
-    // one broadcast lookup per distinct (src, mapGroup)
-    val lookups: Seq[(String, String)] = specs.collect {
-      case (_, ColumnSpec.CodeMapped(src, group)) => (src, group)
-    }.distinct
-
-    val joined = lookups.zipWithIndex.foldLeft(events) {
-      case (df, ((src, group), i)) =>
-        val dim = codeDim
-          .filter(col("MAP_GROUP") === group && col("SOURCE_SYSTEM") === sys)
-          .select(
-            col("SOURCE_VALUE").as(s"__cm_key_$i"),
-            col("TARGET_VALUE").as(s"__cm_val_$i"))
-        df.join(broadcast(dim), df(src) === col(s"__cm_key_$i"), "left")
-    }
-
     def resolve(spec: ColumnSpec): Column = spec match {
       case ColumnSpec.Direct(src) => col(src)
       case ColumnSpec.CodeMapped(src, group) =>
-        val i = lookups.indexOf((src, group))
+        val codes = CodeMapping.defaultRows
+          .filter(r => r.MAP_GROUP == group && r.SOURCE_SYSTEM == sys)
+          .map(r => r.SOURCE_VALUE -> r.TARGET_VALUE).toMap
         // miss ⇒ pass source value through (FN_CONVERT_CODE fallback,
-        // asis…03_create_mapping_tables.sql:56-57)
-        coalesce(col(s"__cm_val_$i"), col(src))
+        // asis…03_create_mapping_tables.sql:56-57); element_at yields
+        // null for a missing key
+        coalesce(element_at(typedLit(codes), col(src)), col(src))
       case ColumnSpec.YnToBit(src) =>
         when(col(src) === "Y", lit(1)).otherwise(lit(0)).cast("decimal(38,10)")
       case ColumnSpec.BitToYn(src) =>
@@ -71,8 +59,8 @@ object Transform {
     }
 
     val targetCols = specs.map { case (name, spec) => resolve(spec).as(name) }
-    val meta = Seq("operation", "source_ts").filter(joined.columns.contains)
+    val meta = Seq("operation", "source_ts").filter(events.columns.contains)
       .map(col)
-    joined.select(meta ++ targetCols: _*)
+    events.select(meta ++ targetCols: _*)
   }
 }

@@ -248,7 +248,7 @@ object CdcQueries extends QueryPack {
       when(!isDelete, image).as("after")).as("payload"))).as("value"))
 
     val parsed = Envelope.parse(envelopes, eventsSide)
-    val tx = Transform(parsed, eventsMapping, Direction.AsisToTobe, CodeMapping.dim(s))
+    val tx = Transform(parsed, eventsMapping, Direction.AsisToTobe)
     val changes = tx.withColumn("seq", col("EVENT_ID").cast("long"))
     val targetCols = eventsMapping.asisToTobe.map(_._1)
     val base = s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -38,9 +38,7 @@ import graft.cdc._
 final class MultiplexedSyncPipeline(
     spark: SparkSession,
     store: SnapshotStore,
-    trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-    watermarkDelay: String = "10 minutes",
-    loopTtlMs: Long = LoopDedupTws.ttlMsDefault) {
+    trigger: Trigger = Trigger.ProcessingTime("5 seconds")) {
 
   private val inner = new SyncPipeline(spark, store)
 
@@ -51,13 +49,13 @@ final class MultiplexedSyncPipeline(
       source: DataFrame,
       pairs: Seq[(TableMapping, Direction.Value)],
       checkpoint: String): StreamingQuery = {
-    // spread the raw (topic, value) rows BEFORE the per-topic branches:
-    // the map-side work (envelope parse + transform) otherwise runs on
-    // the source's own partitioning — often one or two partitions per
-    // trigger (Kafka partition count, MemoryStream blocks) — which
-    // serializes exactly the stage consolidation is supposed to
-    // parallelize. One narrow-row exchange buys map-side parallelism
-    // equal to the state tier's.
+    // spread the raw (topic, value) rows so the map-side work (envelope
+    // parse + transform) does not run on the source's own partitioning
+    // — often one or two partitions per trigger (Kafka partition count,
+    // MemoryStream blocks). The optimizer pushes each branch's topic
+    // filter below this repartition, so n pairs plan n source scans and
+    // n round-robin exchanges, each carrying only its own topic's rows:
+    // map-side parallelism equal to the state tier's, per branch.
     val spread = source.repartition(MultiplexedSyncPipeline.shufflePartitions)
     // pair i's target columns ride as struct `__p<i>`, null in the
     // other pairs' rows
@@ -70,8 +68,8 @@ final class MultiplexedSyncPipeline(
           struct(targetCols.map(col): _*).as(payload(i)))
     }
     val union = branches.reduce(_.unionByName(_, allowMissingColumns = true))
-      .withWatermark("event_ts", watermarkDelay)
-    val writer = LoopDedupTws(union, ttlMs = loopTtlMs).writeStream
+      .withWatermark("event_ts", MultiplexedSyncPipeline.watermarkDelay)
+    val writer = LoopDedupTws(union).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -112,6 +110,11 @@ object MultiplexedSyncPipeline {
     * trigger.
     */
   private[graft] val shufflePartitions = 6
+
+  /** Event-time lateness the dedup's watermark allows; the same span
+    * as the loop-hash TTL ([[LoopDedupTws.ttlMsDefault]]).
+    */
+  private val watermarkDelay = "10 minutes"
 
   /** Run `start` with [[LoopDedupTws.sessionConf]] and
     * [[shufflePartitions]] set on `spark`, then restore (or unset) the

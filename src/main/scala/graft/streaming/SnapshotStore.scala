@@ -1288,13 +1288,19 @@ final class SnapshotStore(
     * prunes its scan (`AuditPruneSpec`). Read with
     * [[SnapshotStore.auditSchema]]: no footer inference, so building the
     * frame starts no Spark job, and an empty log still has its columns.
-    * Staging dirs are dot-prefixed, which Spark's listing skips.
+    * The read names the date partitions, not the root: Spark's listing
+    * treats a `_`-prefixed root as hidden and warns on every read. The
+    * `log_date=*` glob leaves out the dot-prefixed staging dirs.
     */
-  def audit(): DataFrame =
-    if (exists(auditRoot))
-      spark.read.schema(SnapshotStore.auditSchema).parquet(auditRoot)
+  def audit(): DataFrame = {
+    val dates = Option(fs.globStatus(new Path(s"$auditRoot/log_date=*")))
+      .toSeq.flatten.map(_.getPath.toString)
+    if (dates.nonEmpty)
+      spark.read.schema(SnapshotStore.auditSchema)
+        .option("basePath", auditRoot).parquet(dates: _*)
     else
       spark.createDataFrame(java.util.Collections.emptyList[Row](), SnapshotStore.auditSchema)
+  }
 }
 
 object SnapshotStore {

@@ -21,8 +21,6 @@ import graft.cdc._
   */
 final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
 
-  private val codeDim = CodeMapping.dim(spark)
-
   /** Parse + transform + hash one table/direction slice of the source. */
   def transformed(
       source: DataFrame,
@@ -32,7 +30,7 @@ final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
     val side = mapping.sideFor(direction)
     val target = mapping.targetFor(direction)
     val parsed = Envelope.parse(source.filter(col("topic") === topic), side)
-    val tx = Transform(parsed, mapping, direction, codeDim)
+    val tx = Transform(parsed, mapping, direction)
     val targetCols = mapping.specsFor(direction).map(_._1)
     val valueCols = targetCols.filterNot(_ == target.pk)
     tx.withColumn("change_hash",
@@ -140,7 +138,11 @@ final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
       }
     }
 
-    val staged = timed("stageDeltas")(concurrently(pending)(stage))
+    val staged = timed("stageDeltas") {
+      val out = new Array[Staged](pending.size)
+      graft.Par.run(pending.indices.map(i => () => out(i) = stage(pending(i))): _*)
+      out.toSeq
+    }
     // an empty slice leaves no version: the table sits this epoch out
     staged.filter(t => t.events == 0L && t.version >= 0)
       .foreach(t => store.abortDelta(t.slice.target.table, t.version))
@@ -210,16 +212,5 @@ final class SyncPipeline(spark: SparkSession, store: SnapshotStore) {
         .foreach(t => store.finalizeDelta(t.slice.target.table, t.version))
       store.publishEpochAudit(auditKey)
     }
-  }
-
-  /** `f` over `xs`, one thread each, for the per-table delta stages. */
-  private def concurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(xs.size max 1)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(xs.map(x => scala.concurrent.Future(f(x)))),
-      scala.concurrent.duration.Duration(10, "min"))
-    finally pool.shutdown()
   }
 }

@@ -19,7 +19,7 @@ class TransformSpec extends SparkSpec {
 
   test("BOOK ASIS→TOBE: rename, code map, YnToBit, cast+default, literals") {
     val out = Transform(asisBookEvents, Registry.book, Direction.AsisToTobe,
-      CodeMapping.dim(spark), now = fixedNow).orderBy("BOOK_ID").collect()
+      now = fixedNow).orderBy("BOOK_ID").collect()
 
     val r1 = out(0)
     assert(r1.getAs[String]("TITLE") == "홍길동전")
@@ -45,8 +45,7 @@ class TransformSpec extends SparkSpec {
         Timestamp.valueOf("2024-03-04 10:30:00"), "SYNC", "SYNC"))
       .toDF("operation", "BOOK_ID", "TITLE", "AUTHOR_NAME", "CATEGORY_CD", "IS_ACTIVE",
         "CREATED_AT", "UPDATED_AT", "CREATED_BY", "UPDATED_BY")
-    val out = Transform(tobe, Registry.book, Direction.TobeToAsis,
-      CodeMapping.dim(spark), now = fixedNow).collect()
+    val out = Transform(tobe, Registry.book, Direction.TobeToAsis, now = fixedNow).collect()
     val r = out(0)
     assert(r.getAs[String]("BOOK_TITLE") == "t")
     assert(r.getAs[String]("CATEGORY") == "01") // LIT → 01
@@ -61,11 +60,9 @@ class TransformSpec extends SparkSpec {
     val asis = Seq(("INSERT", 1L, "kim", "k@x.com", "A", "Y",
       Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF("operation", "MEMBER_ID", "MEMBER_NAME", "EMAIL", "MEMBER_TYPE", "STATUS", "REG_DATE")
-    val tobe = Transform(asis, Registry.member, Direction.AsisToTobe,
-      CodeMapping.dim(spark), now = fixedNow)
+    val tobe = Transform(asis, Registry.member, Direction.AsisToTobe, now = fixedNow)
     assert(tobe.head().getAs[String]("MEMBER_TYPE_CD") == "ADMIN")
-    val back = Transform(tobe, Registry.member, Direction.TobeToAsis,
-      CodeMapping.dim(spark), now = fixedNow)
+    val back = Transform(tobe, Registry.member, Direction.TobeToAsis, now = fixedNow)
     val r = back.head()
     assert(r.getAs[String]("MEMBER_TYPE") == "A")
     assert(r.getAs[String]("STATUS") == "Y")
@@ -74,8 +71,7 @@ class TransformSpec extends SparkSpec {
 
   test("one-directional mappings refuse the wrong direction") {
     intercept[IllegalArgumentException] {
-      Transform(asisBookEvents, Registry.legacyCode, Direction.TobeToAsis,
-        CodeMapping.dim(spark))
+      Transform(asisBookEvents, Registry.legacyCode, Direction.TobeToAsis)
     }
   }
 }

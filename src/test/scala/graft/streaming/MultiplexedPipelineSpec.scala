@@ -36,32 +36,34 @@ class MultiplexedPipelineSpec extends SparkSpec {
   private def svcTobe(id: Int, name: String) =
     s"""{"SERVICE_ID":"$id","SERVICE_NAME":"$name","SERVICE_TYPE_CD":"STD","IS_ACTIVE":"1","CREATED_AT":$t0}"""
 
+  private val allPairs: Seq[(TableMapping, Direction.Value)] =
+    Registry.byTopic.values.toSeq.sortBy(p => p._1.entity + p._2)
+  private def oneInsertPerTopic: Seq[(String, String)] = Seq(
+    Registry.topicFor(Direction.AsisToTobe, Registry.book) ->
+      env("ASIS_USER", "BOOK_INFO", "c", bookAsis(1, "b-one"), t0),
+    Registry.topicFor(Direction.TobeToAsis, Registry.book) ->
+      env("TOBE_USER", "TB_BOOK", "c", bookTobe(100, "b-hundred"), t0),
+    Registry.topicFor(Direction.AsisToTobe, Registry.member) ->
+      env("ASIS_USER", "MEMBER_INFO", "c", memberAsis(2, "alice"), t0),
+    Registry.topicFor(Direction.TobeToAsis, Registry.member) ->
+      env("TOBE_USER", "TB_MEMBER", "c", memberTobe(200, "bob"), t0),
+    Registry.topicFor(Direction.AsisToTobe, Registry.legacyCode) ->
+      env("ASIS_USER", "LEGACY_CODE", "c", legacyAsis("C1", "code-one"), t0),
+    Registry.topicFor(Direction.TobeToAsis, Registry.newService) ->
+      env("TOBE_USER", "TB_NEW_SERVICE", "c", svcTobe(300, "svc"), t0))
+
   test("all six topics through ONE query: applies, audit, loop block, idle topics") {
     val dir = Files.createTempDirectory("graft-mux").toString
     val store = new SnapshotStore(spark, s"$dir/store")
-    val pairs: Seq[(TableMapping, Direction.Value)] =
-      Registry.byTopic.values.toSeq.sortBy(p => p._1.entity + p._2)
     val pipeline = new MultiplexedSyncPipeline(spark, store,
       trigger = Trigger.ProcessingTime("0 seconds"))
     val mem = MemoryStream[(String, String)](spark)
     val source = mem.toDF().toDF("topic", "value")
-    val q = pipeline.start(source, pairs, s"$dir/ckpt")
+    val q = pipeline.start(source, allPairs, s"$dir/ckpt")
     def topic(m: TableMapping, d: Direction.Value) = Registry.topicFor(d, m)
     try {
       // ---- round 1: one insert per topic, one trigger for all six
-      mem.addData(
-        topic(Registry.book, Direction.AsisToTobe) ->
-          env("ASIS_USER", "BOOK_INFO", "c", bookAsis(1, "b-one"), t0),
-        topic(Registry.book, Direction.TobeToAsis) ->
-          env("TOBE_USER", "TB_BOOK", "c", bookTobe(100, "b-hundred"), t0),
-        topic(Registry.member, Direction.AsisToTobe) ->
-          env("ASIS_USER", "MEMBER_INFO", "c", memberAsis(2, "alice"), t0),
-        topic(Registry.member, Direction.TobeToAsis) ->
-          env("TOBE_USER", "TB_MEMBER", "c", memberTobe(200, "bob"), t0),
-        topic(Registry.legacyCode, Direction.AsisToTobe) ->
-          env("ASIS_USER", "LEGACY_CODE", "c", legacyAsis("C1", "code-one"), t0),
-        topic(Registry.newService, Direction.TobeToAsis) ->
-          env("TOBE_USER", "TB_NEW_SERVICE", "c", svcTobe(300, "svc"), t0))
+      mem.addData(oneInsertPerTopic)
       q.processAllAvailable()
 
       // identical table states to ConcurrentPipelineSpec's round 1
@@ -161,5 +163,40 @@ class MultiplexedPipelineSpec extends SparkSpec {
         case (k, None) => spark.conf.unset(k)
       }
     }
+  }
+
+  test("a six-pair data batch plans no broadcast: code maps are literal lookups") {
+    val dir = Files.createTempDirectory("graft-mux-plan").toString
+    val store = new SnapshotStore(spark, s"$dir/store")
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val saved = spark.conf.getOption(noData)
+    val mem = MemoryStream[(String, String)](spark)
+    // no watermark-advance batch after the data batch, so the query's
+    // last execution is the data batch's
+    spark.conf.set(noData, "false")
+    val q = try {
+      new MultiplexedSyncPipeline(spark, store,
+        trigger = Trigger.ProcessingTime("0 seconds"))
+        .start(mem.toDF().toDF("topic", "value"), allPairs, s"$dir/ckpt")
+    } finally saved match {
+      case Some(v) => spark.conf.set(noData, v)
+      case None => spark.conf.unset(noData)
+    }
+    try {
+      mem.addData(oneInsertPerTopic)
+      q.processAllAvailable()
+      assert(store.snapshot("TB_BOOK", null).head().getAs[String]("CATEGORY_CD") == "LIT")
+      val last = q.asInstanceOf[
+          org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution
+      assert(q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq ==
+        Seq(last.currentBatchId), "the last execution is the one data batch")
+      val plan = last.executedPlan
+      val broadcasts = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => e
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+      }
+      assert(broadcasts.isEmpty, s"the data batch plans broadcasts:\n$plan")
+    } finally q.stop()
   }
 }

@@ -113,6 +113,39 @@ class SnapshotStoreSpec extends SparkSpec {
       Map(java.sql.Date.valueOf("2026-01-13") -> 5L, java.sql.Date.valueOf("2026-01-14") -> 4L))
   }
 
+  test("audit() logs no warning, with or without a published log") {
+    val (store, dir) = newStore(compactEvery = 100)
+    // the listing's hidden-path warning, and the sink-metadata probe's
+    val loggers = Seq("org.apache.spark.sql.execution.datasources.DataSource",
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
+      .map(org.apache.logging.log4j.LogManager.getLogger(_)
+        .asInstanceOf[org.apache.logging.log4j.core.Logger])
+    val warns = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "audit-warns", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.WARN)) {
+          warns.add(e.getMessage.getFormattedMessage); ()
+        }
+    }
+    appender.start()
+    loggers.foreach(_.addAppender(appender))
+    try {
+      assert(loggers.forall(_.isWarnEnabled))
+      // only a staging dir: the log has no date partition yet
+      store.stageEpochAudit(auditRows(2, "2026-01-13"), "staged-only")
+      assert(store.audit().count() == 0)
+      store.appendAudit(auditRows(3, "2026-01-13"))
+      assert(store.audit().count() == 3)
+      assert(Files.exists(Paths.get(s"$dir/_audit/.epochs/staged-only")))
+      assert(warns.isEmpty, warns)
+    } finally {
+      loggers.foreach(_.removeAppender(appender))
+      appender.stop()
+    }
+  }
+
   test("appendAudit refuses a frame that is not on the audit schema") {
     val (store, _) = newStore(compactEvery = 100)
     val e = intercept[IllegalArgumentException](store.appendAudit(
