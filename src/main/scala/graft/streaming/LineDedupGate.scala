@@ -100,7 +100,7 @@ object LineDedupGate {
     val spark = batch.sparkSession
     val epochDone = EpochCommit.epochExists(spark, outDir, batchId)
     // defensive parse: a non-numeric marker (e.g. a count table seeded
-    // via cloneAt, whose meta is `clone:T@v` provenance) must read as
+    // by a caller's own commit, whose meta is free text) must read as
     // "counts not done" — an unconditional .toLong would throw on every
     // trigger, a crash loop. NOTE the count table, outDir and the
     // stream checkpoint must be reset TOGETHER: a checkpoint reset

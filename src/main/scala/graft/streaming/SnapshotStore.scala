@@ -17,13 +17,15 @@ import graft.cdc.Apply
   * O(|table|)), or both when an automatic fold wrote a base beside its
   * delta. One writer, `writeVersion`, puts every version directory on
   * disk, in one order: the parquet data, `_graft_schema` (the layout
-  * fingerprint), `_graft_ts` (the commit clock), then the optional
+  * fingerprint), `_graft_ts` (the commit time), then the optional
   * `_graft_meta` (e.g. an epoch id). Nothing is visible until the
   * `_current` pointer flips to N: that atomic small-file replace is the
   * commit point (the read-version/write-new-version/commit protocol
   * Delta uses, minus the transaction log), and a directory at N above
   * the pointer is crash debris that the next write at N clears first.
-  * A version's markers are read from its delta first.
+  * A version's markers are read from its delta first. No committed
+  * version directory is ever deleted, so every version reads back by
+  * number ([[snapshotAt]], [[changeFeed]]).
   *
   * A read at V goes through one resolver, `chainAt`: the newest base
   * `v<B>` with B ≤ V plus every delta in (B, V], replayed through
@@ -89,14 +91,6 @@ final class SnapshotStore(
     org.apache.hadoop.fs.FileContext.getFileContext(
       new Path(basePath).toUri, spark.sessionState.newHadoopConf())
 
-  /** Millisecond clock stamping committed versions (`_graft_ts`, read
-    * by [[versionAsOf]]/[[snapshotAsOf]]/[[history]]). Overridable so
-    * tests drive deterministic timelines; explicit markers rather than
-    * file mtimes because mtime survives neither copies nor some object
-    * stores' metadata handling.
-    */
-  private[streaming] var clock: () => Long = () => System.currentTimeMillis()
-
   private def exists(path: String): Boolean = fs.exists(new Path(path))
 
   private def readString(path: String): String = {
@@ -109,7 +103,8 @@ final class SnapshotStore(
     * truncated in-between (a plain create(overwrite=true) truncates the
     * destination first; the managed refresh loop reads `_current` from
     * another thread and hit exactly that window). Used for every marker
-    * the store writes (`_current`, `_horizon`, meta, fingerprints) so
+    * the store writes (`_current`, each version's `_graft_*` markers,
+    * the table's kind and bucket markers) so
     * no reader of a live table can observe a half-written marker.
     */
   private def writeString(path: String, s: String): Unit = {
@@ -123,9 +118,9 @@ final class SnapshotStore(
       fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  private def deleteIfExists(path: String): Boolean = {
+  private def deleteIfExists(path: String): Unit = {
     val p = new Path(path)
-    fs.exists(p) && fs.delete(p, true)
+    if (fs.exists(p)) fs.delete(p, true)
   }
 
   private def renameOrFail(src: Path, dst: Path): Unit =
@@ -157,6 +152,17 @@ final class SnapshotStore(
   private def baseAtOrBefore(table: String, v: Int): Int =
     (v to 1 by -1).find(i => exists(baseDir(table, i))).getOrElse(0)
 
+  private def tsFile(dir: String) = s"$dir/_graft_ts"
+
+  private def metaFile(dir: String) = s"$dir/_graft_meta"
+
+  /** Commit time (epoch millis): an explicit marker, not the directory
+    * mtime, which survives neither copies nor some object stores'
+    * metadata handling.
+    */
+  private def writeCommitTs(dir: String): Unit =
+    writeString(tsFile(dir), System.currentTimeMillis().toString)
+
   /** The one version writer (the protocol in the class doc): data, then
     * `_graft_schema`, then `_graft_ts`, then the optional `_graft_meta`.
     * It never flips the pointer; the caller's flip commits what it wrote.
@@ -182,6 +188,12 @@ final class SnapshotStore(
     */
   private def marker(table: String, v: Int, file: String => String): Option[String] =
     Seq(deltaDir(table, v), baseDir(table, v)).map(file).find(exists).map(readString)
+
+  /** Version `v`'s commit stamp, if recorded (versions written before
+    * stamping existed have none).
+    */
+  private def versionTimestamp(table: String, v: Int): Option[Long] =
+    marker(table, v, tsFile).flatMap(s => scala.util.Try(s.trim.toLong).toOption)
 
   /** The one chain resolver: version `v` is the newest base `v<B>` with
     * B ≤ v plus every delta in (B, v]. Returns the base read (None
@@ -280,19 +292,6 @@ final class SnapshotStore(
     case None => spark.read.parquet(dir)
   }
 
-  /** Table-level copy of the newest delta layout — version dirs (and
-    * their fingerprints) are reclaimed by [[vacuum]], but the LAYOUT
-    * must outlive them: a base-only chain (manual [[compact]] then
-    * vacuum) still serves empty [[changeFeed]] ranges and appends new
-    * [[mutateWhere]] deltas, both of which need the (seq, operation,
-    * pk, data…) roles. Overwritten at every [[stageDelta]].
-    */
-  private def deltaLayoutFile(table: String) = s"${tableDir(table)}/_graft_delta_layout"
-
-  private def deltaLayout(table: String): Option[Seq[(String, String)]] =
-    if (!exists(deltaLayoutFile(table))) None
-    else Some(parseFp(readString(deltaLayoutFile(table))))
-
   /** Incoming delta layout vs the chain's: identical → None; pure
     * add-column (same first-three roles, old layout a strict prefix) →
     * Some(()) meaning "compaction boundary required"; anything else →
@@ -378,115 +377,12 @@ final class SnapshotStore(
       .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
   }
 
-  /** Lowest version with full on-disk history (1 = nothing reclaimed).
-    * Written by [[vacuum]]; [[snapshotAt]] and [[changeFeed]] refuse
-    * reads below it LOUDLY — the alternative is silently-wrong results
-    * from reconstruction over missing files.
-    */
-  def horizon(table: String): Int = {
-    val p = s"${tableDir(table)}/_horizon"
-    if (exists(p)) readString(p).trim.toInt else 1
-  }
-
-  /** Reclaim history: delete every version directory BELOW the newest
-    * base (the current snapshot reconstructs from that base plus later
-    * deltas, so nothing at or above it may go), and record the new
-    * horizon so time-travel/change-feed reads below it are refused
-    * instead of silently wrong. Returns the reclaimed version numbers.
-    * Like [[compact]]: a maintenance operation under the single-writer
-    * assumption — run on a quiesced table. A table whose chain has
-    * never folded into a base (no compaction yet) reclaims nothing.
-    */
-  def vacuum(table: String): Seq[Int] = {
-    val cur = currentVersion(table)
-    val b = baseAtOrBefore(table, cur)
-    if (b <= 1) return Seq.empty
-    // horizon FIRST: a crash mid-delete must leave the guard in place,
-    // not a half-deleted chain that reads below the old horizon would
-    // silently mis-reconstruct (the exact failure the marker prevents)
-    writeString(s"${tableDir(table)}/_horizon", b.toString)
-    (1 until b).filter { v =>
-      val deletedBase = deleteIfExists(baseDir(table, v))
-      val deletedDelta = deleteIfExists(deltaDir(table, v))
-      deletedBase || deletedDelta
-    }
-  }
-
-  // ---- timestamp time travel ---------------------------------------
-
-  private def tsFile(dir: String) = s"$dir/_graft_ts"
-
-  private def metaFile(dir: String) = s"$dir/_graft_meta"
-
-  private def writeCommitTs(dir: String): Unit =
-    writeString(tsFile(dir), clock().toString)
-
-  /** Commit wall-clock (epoch millis) of a live version, if recorded
-    * (versions written before timestamp stamping existed have none).
-    */
-  def versionTimestamp(table: String, v: Int): Option[Long] =
-    marker(table, v, tsFile).flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-
-  /** The latest version committed at or before `tsMillis` (0 = before
-    * the table's first commit). Refuses when the answer sits below the
-    * vacuum horizon: the reclaimed versions' dirs — and their
-    * timestamps — are gone, so resolving past them would silently pin
-    * the WRONG version (a ts between the last reclaimed commit and the
-    * horizon base must error, not round up). Only stamped versions
-    * participate — and when none resolves ≤ ts on a non-empty chain
-    * that still carries UNSTAMPED versions (history written before
-    * timestamp stamping existed), the answer is equally
-    * unreconstructable: the unstamped commits may or may not predate
-    * ts, so returning 0 would claim "the table was empty then" on no
-    * evidence. Refuse, don't guess — 0 is reserved for chains whose
-    * EARLIEST stamped commit provably lands after ts.
-    */
-  def versionAsOf(table: String, tsMillis: Long): Int = {
-    val h = horizon(table)
-    val cur = currentVersion(table)
-    val stamped = (h to cur)
-      .flatMap(v => versionTimestamp(table, v).map(v -> _))
-    stamped.filter(_._2 <= tsMillis).map(_._1).maxOption.getOrElse {
-      if (h > 1) throw new IllegalArgumentException(
-        s"versionAsOf: no surviving version of $table at or before " +
-          s"ts=$tsMillis — history below the vacuum horizon v$h was " +
-          "reclaimed, so the version live at that instant cannot be " +
-          "reconstructed")
-      if (cur > 0 && stamped.size < (h to cur).size)
-        throw new IllegalArgumentException(
-          s"versionAsOf: $table carries ${(h to cur).size - stamped.size} " +
-            s"pre-stamping version(s) with no commit timestamp — whether " +
-            s"they predate ts=$tsMillis cannot be determined (refusing " +
-            "rather than resolving to the empty table)")
-      0
-    }
-  }
-
-  /** [[snapshotAt]] resolved by commit timestamp: the table exactly as
-    * it stood at `tsMillis` (a ts between two commits resolves to the
-    * earlier one; a ts before the first commit is the empty table).
-    */
-  def snapshotAsOf(table: String, tsMillis: Long,
-      schema: StructType = null): DataFrame =
-    snapshotAt(table, versionAsOf(table, tsMillis), schema)
-
-  /** Every change event committed AFTER `tsMillis` up to the current
-    * version — [[changeFeed]] with its lower bound resolved by commit
-    * timestamp (the "what changed since I last looked at the clock"
-    * consumer).
-    */
-  def changeFeedSince(table: String, tsMillis: Long): DataFrame =
-    changeFeed(table, versionAsOf(table, tsMillis), currentVersion(table))
-
   /** Time travel: reconstruct any committed version (0 = empty). */
   def snapshotAt(table: String, version: Int, schema: StructType = null): DataFrame = {
     refuseAdditive(table, "snapshotAt")
     if (version == 0)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    require(version >= horizon(table),
-      s"snapshotAt: v$version is below the vacuum horizon v${horizon(table)} " +
-        s"of $table — its history was reclaimed")
     chainAt(table, version) match {
       case (base, None) => // the version is itself a base
         if (schema == null) base.get else withMissingAsNull(base.get, schema.fields.toSeq)
@@ -524,35 +420,19 @@ final class SnapshotStore(
     val cur = currentVersion(table)
     require(fromVersion >= 0 && fromVersion <= toVersion && toVersion <= cur,
       s"changeFeed: need 0 <= from <= to <= $cur, got [$fromVersion, $toVersion]")
-    val h = horizon(table)
-    require(fromVersion >= h - 1,
-      s"changeFeed: versions below the vacuum horizon v$h were reclaimed — " +
-        s"cannot read changes from v$fromVersion (missing deltas would make " +
-        "the feed silently incomplete)")
-    // an all-compaction (or empty) range still needs the layout: read
-    // the nearest delta at or before the range bound, emptied — or,
-    // when vacuum reclaimed EVERY delta dir (a manual compact folded
-    // the whole chain into a base first), rebuild the empty feed from
-    // the table-level layout marker, which survives reclamation. Found
-    // by the store-op fuzzer: compact → vacuum → sync threw here on a
-    // legitimately-empty range instead of returning no changes.
-    val anyDelta = (1 to toVersion).reverse
-      .find(i => exists(deltaDir(table, i)))
-    val inRange = (fromVersion + 1 to toVersion)
-      .exists(i => exists(deltaDir(table, i)))
-    val feed =
-      if (inRange) readDeltas(table, fromVersion + 1, toVersion)
-      else anyDelta match {
-        case Some(d) => readDeltas(table, d, d).limit(0)
-        case None =>
-          val layout = deltaLayout(table).getOrElse(
-            throw new IllegalArgumentException(
-              s"changeFeed: table $table has no delta history at or " +
-                s"before v$toVersion"))
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fpSchema(layout))
-            .withColumn("__v", lit(null).cast("int"))
-      }
+    // an empty or all-base range (compactions, full commits) still
+    // carries the delta layout: the nearest delta at or below
+    // `toVersion`, emptied — else, for a chain that opens with bases,
+    // the newest delta
+    val nearest = (toVersion to 1 by -1).find(i => exists(deltaDir(table, i)))
+    val feed = nearest match {
+      case Some(d) if d > fromVersion => readDeltas(table, fromVersion + 1, toVersion)
+      case _ =>
+        val d = nearest.orElse((cur until toVersion by -1).find(i => exists(deltaDir(table, i))))
+          .getOrElse(throw new IllegalArgumentException(
+            s"changeFeed: table $table has no delta history"))
+        readDeltas(table, d, d).limit(0)
+    }
     val dataCols = feed.columns.filterNot(_ == "__v")
     feed.select((Seq(col("__v").as("commit_version")) ++ dataCols.map(col)): _*)
   }
@@ -783,7 +663,6 @@ final class SnapshotStore(
     // parse/transform into a single task; a round-robin shuffle of a
     // trigger-bounded batch is trivial and keeps the source parallel
     writeVersion(deltaDir(table, next), selected.repartition(deltaWriteParts), meta)
-    writeString(deltaLayoutFile(table), fpString(selected.schema))
     next
   }
 
@@ -838,45 +717,15 @@ final class SnapshotStore(
     foldAsNext(table)
   }
 
-  /** Clone `table`@`version` as a NEW table `dest` (optionally in
-    * another store — the backup/dev-fork maintenance op): the clone is
-    * one compacted version with an independent chain, so vacuuming or
-    * evolving either side never touches the other, and the clone's
-    * history starts fresh (horizon 1, version 1). Works for both kinds:
-    * a CDC/base table clones as a full base (`commit`), an additive
-    * table as the folded state re-committed under the same measure
-    * columns (sums ARE the state, so the fold loses nothing). Refuses
-    * an existing destination — a clone is a CREATE, and silently
-    * stacking a base onto an existing chain would be corruption.
-    * The clone's meta records the provenance (`clone:<table>@<v>`).
-    */
-  def cloneAt(table: String, version: Int, dest: String,
-      destStore: SnapshotStore = this): Int = {
-    require(destStore.currentVersion(dest) == 0 &&
-        destStore.tableKind(dest).isEmpty,
-      s"cloneAt: destination '$dest' already exists — a clone is a CREATE")
-    val provenance = Some(s"clone:$table@$version")
-    additiveCols(table) match {
-      case Some(cols) =>
-        destStore.commitAdditive(dest,
-          additiveSnapshotAt(table, version, null), meta = provenance,
-          cntCols = cols, bucketBy = bucketSpec(table))
-      case None =>
-        destStore.commit(dest, snapshotAt(table, version), meta = provenance)
-    }
-  }
-
   /** The table's version history — the operational surface a
-    * maintenance job (or an operator deciding what [[vacuum]] will
-    * reclaim) reads: one row per live version with its kind
-    * (`base`/`delta`), commit meta, data-file count and bytes, plus
-    * whether it sits below the vacuum horizon. Pure file metadata —
+    * maintenance job reads: one row per version directory with its
+    * kind (`base`/`delta`), commit meta, data-file count, bytes and
+    * commit stamp. Pure file metadata —
     * O(versions) marker reads + one listStatus per version directory,
     * no data files opened. Built driver-side (a chain is
     * human-lifetime-bounded: thousands of versions, not billions).
     */
   def history(table: String): DataFrame = {
-    val h = horizon(table)
     val rows = (1 to currentVersion(table)).flatMap { v =>
       val ts = versionTimestamp(table, v)
       Seq(baseDir(table, v) -> "base", deltaDir(table, v) -> "delta")
@@ -886,81 +735,11 @@ final class SnapshotStore(
             st.isFile && st.getPath.getName.endsWith(".parquet"))
           val metaP = metaFile(d)
           (v, kind, if (exists(metaP)) readString(metaP) else null,
-            files.length, files.map(_.getLen).sum, v >= h, ts)
+            files.length, files.map(_.getLen).sum, ts)
         }
     }
     import spark.implicits._
-    rows.toDF("version", "kind", "meta", "n_files", "bytes",
-      "above_horizon", "commit_ts")
-  }
-
-  /** Row-level predicate delete — the retention/right-to-erasure
-    * maintenance op: every current row matching `predicate` gets a
-    * DELETE change appended as ONE delta version (O(|matching|)
-    * written, never a table rewrite), flowing through the change feed,
-    * [[netChanges]] and the JDBC sync like any other CDC delete — a
-    * downstream serving copy erases the same rows on its next
-    * incremental sync. `seq` orders the delete against the chain (a
-    * batch id / epoch counter under the single-writer assumption);
-    * `meta` gates replays exactly like a streaming commit. The DELETE
-    * rows carry the deleted values (the change feed's before-image
-    * flavor — auditable erasure). Returns the number of rows deleted;
-    * an empty match commits NOTHING (no version churn on a no-op).
-    */
-  def deleteWhere(table: String, predicate: org.apache.spark.sql.Column,
-      pk: String, seq: Long, meta: Option[String] = None): Long =
-    mutateWhere(table, predicate, pk, seq, meta, "DELETE", Map.empty)
-
-  /** Row-level predicate update — [[deleteWhere]]'s anonymize-in-place
-    * sibling (the GDPR path that must KEEP the row): matching rows
-    * append as ONE O(matching) UPDATE delta carrying their current
-    * values with the `set` columns overwritten (each expression
-    * evaluates against the matched row, so `set` can reference existing
-    * columns — redaction, masking, recomputation). Unknown `set`
-    * columns refuse loudly: an UPDATE cannot add columns, that is
-    * write-time schema evolution. Returns the number of rows updated.
-    */
-  def updateWhere(table: String, predicate: org.apache.spark.sql.Column,
-      pk: String, seq: Long, set: Map[String, org.apache.spark.sql.Column],
-      meta: Option[String] = None): Long = {
-    require(set.nonEmpty, "updateWhere: no columns to set")
-    mutateWhere(table, predicate, pk, seq, meta, "UPDATE", set)
-  }
-
-  private def mutateWhere(table: String,
-      predicate: org.apache.spark.sql.Column, pk: String, seq: Long,
-      meta: Option[String], op: String,
-      set: Map[String, org.apache.spark.sql.Column]): Long = {
-    refuseAdditive(table, s"${op.toLowerCase}Where")
-    if (currentVersion(table) == 0) return 0L
-    val snap = snapshot(table, null)
-    set.keys.foreach(k => require(snap.columns.contains(k),
-      s"${op.toLowerCase}Where: '$k' is not a column of '$table' " +
-        s"(${snap.columns.mkString(", ")}) — adding columns is schema " +
-        "evolution, not an UPDATE"))
-    require(!set.contains(pk),
-      s"${op.toLowerCase}Where: cannot set the pk column '$pk' — a key " +
-        "change is a DELETE + INSERT, not an UPDATE")
-    val matching = snap.filter(predicate)
-      .localCheckpoint(true) // one pass feeds the count AND the delta
-    val n = matching.count()
-    if (n == 0L) return 0L
-    // the seq COLUMN NAME is part of the chain's recorded layout (the
-    // evolution gate refuses a rename) — reuse the chain's own, from
-    // the table-level layout marker that survives vacuum (a base-only
-    // chain would otherwise silently switch names mid-history); a
-    // never-delta'd table has no layout yet, any name seeds it
-    val seqName = deltaLayout(table)
-      .orElse((1 to currentVersion(table)).reverse
-        .find(v => exists(deltaDir(table, v)))
-        .flatMap(v => readFingerprint(deltaDir(table, v)))) // pre-marker chains
-      .map(_.head._1).getOrElse("__seq")
-    val dataCols = matching.columns.filterNot(_ == pk).toSeq
-    val changes = matching.select(
-      (Seq(lit(seq).as(seqName), lit(op).as("operation"), col(pk))
-        ++ dataCols.map(c => set.getOrElse(c, col(c)).as(c))): _*)
-    commitDelta(table, changes, pk, seqName, dataCols, meta)
-    n
+    rows.toDF("version", "kind", "meta", "n_files", "bytes", "commit_ts")
   }
 
   // ---- additive multiplicity tables --------------------------------
@@ -1160,9 +939,6 @@ final class SnapshotStore(
       throw new IllegalStateException(
         s"additiveSnapshotAt: table '$table' is not an additive " +
           "multiplicity table — read it with snapshot/snapshotAt"))
-    require(version >= horizon(table),
-      s"additiveSnapshotAt: v$version is below the vacuum horizon " +
-        s"v${horizon(table)} of $table — its history was reclaimed")
     val (base, deltas) = chainAt(table, version)
     val raw = (base.toSeq ++ deltas.map(_.drop("__v"))).reduce(_ unionByName _)
     // __bkt is layout, not payload: derived at write, dropped on read

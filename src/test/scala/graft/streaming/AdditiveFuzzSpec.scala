@@ -6,14 +6,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import java.nio.file.Files
 
 /** Additive-chain fuzzer — the [[StoreFuzzSpec]] treatment for the
-  * ADDITIVE kind and the gates built on it. The round-11 fuzzer found
-  * a real seam (compact→vacuum killing the delta layout) on run one;
-  * this suite generates seeded-random op sequences interleaving
+  * ADDITIVE kind and the gates built on it. This suite generates
+  * seeded-random op sequences interleaving
   *
   *  - [[QuotaGate.applyBatch]] batches (fresh, whole-batch replays,
-  *    and torn-window replays against a pre-batch clone — the
-  *    "epochs published, counts never landed" crash, with a vacuum
-  *    dropped INSIDE the window),
+  *    and torn-window replays against a copy of the count table rolled
+  *    back to its pre-batch version — the "epochs published, counts
+  *    never landed" crash),
   *  - [[LineDedupGate.applyBatch]] batches and replays,
   *  - [[MixtureGate.applyBatch]] batches and replays (the sample epoch
   *    re-derives the FULL prefix under post-batch rates — the model
@@ -23,18 +22,18 @@ import java.nio.file.Files
   *  - [[UpsampleGate.applyBatch]] batches and replays (same treatment:
   *    the model recomputes exact integral-div repeat factors and the
   *    per-copy explode over the full prefix; modes randomized),
-  *  - raw chain maintenance: vacuum / cloneAt / additiveSnapshotAt /
-  *    versionAsOf / additiveSnapshotForKeys (manual compact refuses
-  *    additive chains by design — the fold happens automatically every
-  *    compactEvery = 3 commits, so replays and pruned reads cross fold
-  *    boundaries throughout the sequences),
+  *  - raw chain reads and maintenance: compactAdditive /
+  *    additiveSnapshotAt / additiveSnapshotForKeys (manual compact
+  *    refuses additive chains by design — the fold also happens
+  *    automatically every compactEvery = 3 commits, so replays and
+  *    pruned reads cross fold boundaries throughout the sequences),
   *
   * and checks EVERY step against a driver-side model of consumed
   * quotas, line counts, per-version count states and epoch contents.
   * The invariants: gate state equals the model after every op; a
   * replay (any window) never double-charges and never rewrites a
-  * published epoch; forKeys pruning is invisible to results; clones
-  * and time travel resolve to the model's recorded version states.
+  * published epoch; forKeys pruning is invisible to results; reads at
+  * a past version resolve to the model's recorded version state.
   */
 class AdditiveFuzzSpec extends SparkSpec {
   import spark.implicits._
@@ -118,12 +117,11 @@ class AdditiveFuzzSpec extends SparkSpec {
     spark.read.parquet(s"$dir/epoch=$e").select("doc_id").as[Long]
       .collect().toSeq.sorted
 
-  private def runSequence(seqIdx: Int, seed: Long): Unit = {
+  /** Run one sequence; returns the names of the random ops it ran. */
+  private def runSequence(seqIdx: Int, seed: Long): Set[String] = {
     val rnd = new scala.util.Random(seed)
     val dir = Files.createTempDirectory(s"graft-afuzz-$seqIdx").toString
     val store = new SnapshotStore(spark, s"$dir/store", compactEvery = 3)
-    var now = 10000L
-    store.clock = () => now
 
     // ---- model state -------------------------------------------------
     var qUsed = Map.empty[String, Long]
@@ -136,18 +134,17 @@ class AdditiveFuzzSpec extends SparkSpec {
     val uBatches = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, String, Long)]]
     val qBatches = scala.collection.mutable.ArrayBuffer.empty[QBatch]
     val lBatches = scala.collection.mutable.ArrayBuffer.empty[LBatch]
-    // Q-chain counts + commit instant per store version (fill-forward
-    // across versions the gate didn't create, e.g. compactions)
+    // Q-chain counts per store version (fill-forward across versions
+    // the gate didn't create, e.g. compactions)
     val qAtV = scala.collection.mutable.ArrayBuffer[Map[String, Long]](Map.empty)
-    val qTs = scala.collection.mutable.ArrayBuffer[Long](0L)
     def recordQVersions(): Unit = {
-      while (qAtV.length <= store.currentVersion("Q")) { qAtV += qUsed; qTs += now }
+      while (qAtV.length <= store.currentVersion("Q")) qAtV += qUsed
     }
     var idCtr = 0L
     def freshId(): Long = { idCtr += 1; idCtr }
     var qEpoch = -1L
     var lEpoch = -1L
-    var cloneCtr = 0
+    var tornCtr = 0
     val linePool = (1 to 6).map(i => s"banner $i")
 
     def assertCounts(what: String): Unit = {
@@ -340,10 +337,6 @@ class AdditiveFuzzSpec extends SparkSpec {
         s"replay grew a chain (seed $seed)")
     }
 
-    def doVacuum(): Unit = {
-      store.vacuum("Q"); store.vacuum("L"); ()
-    }
-
     def doCompactAdditive(): Unit = {
       // manual fold is content-preserving and carries the meta replay
       // fence; L is bucketed (the gate declares line:64), Q/M are not
@@ -376,94 +369,81 @@ class AdditiveFuzzSpec extends SparkSpec {
       }
     }
 
-    def doClone(): Unit = {
+    def doReadAt(): Unit = {
       val cur = store.currentVersion("Q")
       if (cur >= 1) {
-        val v = store.horizon("Q") + rnd.nextInt(cur - store.horizon("Q") + 1)
-        cloneCtr += 1
-        val got = { store.cloneAt("Q", v, s"QC$cloneCtr")
-          store.additiveSnapshot(s"QC$cloneCtr", qSchema)
-            .as[(String, Long)].collect().toMap }
-        assert(got == qAtV(v).filter(_._2 != 0L),
-          s"clone of Q@v$v drifted (seed $seed)")
-      }
-    }
-
-    def doTimeTravel(): Unit = {
-      val cur = store.currentVersion("Q")
-      val h = store.horizon("Q")
-      if (cur >= 1) {
-        val v = h + rnd.nextInt(cur - h + 1)
-        val ts = qTs(v) + 500L
-        val wantV = (1 to cur).filter(x => qTs(x) <= ts).max
-        assert(store.versionAsOf("Q", ts) == wantV,
-          s"versionAsOf(Q, $ts) drifted (seed $seed)")
-        assert(store.additiveSnapshotAt("Q", wantV, qSchema)
-          .as[(String, Long)].collect().toMap == qAtV(wantV).filter(_._2 != 0L),
-          s"additiveSnapshotAt(Q, v$wantV) drifted (seed $seed)")
+        val v = 1 + rnd.nextInt(cur)
+        assert(store.additiveSnapshotAt("Q", v, qSchema)
+          .as[(String, Long)].collect().toMap == qAtV(v).filter(_._2 != 0L),
+          s"additiveSnapshotAt(Q, v$v) drifted (seed $seed)")
       }
     }
 
     def doTornWindow(): Unit = {
       // the "epochs published, counts never landed" crash, injected by
-      // replaying a landed batch against a clone taken at its
-      // PRE-batch version — with a vacuum dropped inside the window
+      // replaying a landed batch against a copy of Q as that crash
+      // leaves it: the version dirs above the batch's PRE-batch version
+      // gone and the pointer back at it
       if (qBatches.nonEmpty) {
         val b = qBatches(rnd.nextInt(qBatches.size))
-        if (b.preVersion == 0 || b.preVersion >= store.horizon("Q")) {
-          cloneCtr += 1
-          val torn = s"QT$cloneCtr"
-          // pre-version 0 = the batch was the chain's first commit: the
-          // torn chain is simply a fresh table
-          if (b.preVersion > 0) {
-            store.cloneAt("Q", b.preVersion, torn)
-            if (rnd.nextBoolean()) store.vacuum(torn)
-          }
-          QuotaGate.applyBatch(store, torn, qDf(b.docs), b.batchId, "doc_id",
-            "source", "n_tokens", budgets, s"$dir/qkeep", s"$dir/qreject")
-          // the replay must not rewrite the published epochs…
-          assert(epochIds(s"$dir/qkeep", b.batchId) == b.keep,
-            s"torn replay rewrote a published epoch (seed $seed)")
-          // …and must land exactly the batch's own delta on the torn
-          // chain (recomputed against the same pre-batch state)
-          val (want, _, _) = modelQuota(b.preCounts, b.docs)
-          assert(store.additiveSnapshot(torn, qSchema)
-            .as[(String, Long)].collect().toMap == want.filter(_._2 != 0L),
-            s"torn replay landed the wrong delta (seed $seed)")
+        tornCtr += 1
+        val torn = s"QT$tornCtr"
+        // pre-version 0 = the batch was the chain's first commit: the
+        // torn chain is simply a fresh table
+        if (b.preVersion > 0) {
+          val t = new java.io.File(s"$dir/store/$torn")
+          org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$dir/store/Q"), t)
+          t.listFiles().filter(_.getName.matches("[vd]\\d+"))
+            .filter(_.getName.tail.toInt > b.preVersion)
+            .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+          Files.write(new java.io.File(t, "_current").toPath, b.preVersion.toString.getBytes)
         }
+        QuotaGate.applyBatch(store, torn, qDf(b.docs), b.batchId, "doc_id",
+          "source", "n_tokens", budgets, s"$dir/qkeep", s"$dir/qreject")
+        // the replay must not rewrite the published epochs…
+        assert(epochIds(s"$dir/qkeep", b.batchId) == b.keep,
+          s"torn replay rewrote a published epoch (seed $seed)")
+        // …and must land exactly the batch's own delta on the torn
+        // chain (recomputed against the same pre-batch state)
+        val (want, _, _) = modelQuota(b.preCounts, b.docs)
+        assert(store.additiveSnapshot(torn, qSchema)
+          .as[(String, Long)].collect().toMap == want.filter(_._2 != 0L),
+          s"torn replay landed the wrong delta (seed $seed)")
       }
     }
 
+    val ran = scala.collection.mutable.Set.empty[String]
+    def op(name: String)(f: => Unit): Unit = { ran += name; f }
     val len = 6 + rnd.nextInt(4)
     (0 until len).foreach { _ =>
-      now += 1000L
-      rnd.nextInt(14) match {
-        case 0 | 1     => doQBatch()
-        case 2 | 3     => doLBatch()
-        case 4 | 5     => doMBatch()
-        case 12 | 13   => doUBatch()
-        case 6         => doReplay()
-        case 7         => if (rnd.nextBoolean()) doTornWindow()
-                          else doCompactAdditive()
-        case 8         => doVacuum()
-        case 9         => doForKeys()
-        case 10        => doClone()
-        case _         => doTimeTravel()
+      rnd.nextInt(12) match {
+        case 0 | 1     => op("quota")(doQBatch())
+        case 2 | 3     => op("lines")(doLBatch())
+        case 4 | 5     => op("mixture")(doMBatch())
+        case 10 | 11   => op("upsample")(doUBatch())
+        case 6         => op("replay")(doReplay())
+        case 7         => if (rnd.nextBoolean()) op("torn")(doTornWindow())
+                          else op("compact")(doCompactAdditive())
+        case 8         => op("forKeys")(doForKeys())
+        case _         => op("readAt")(doReadAt())
       }
       assertCounts("after op")
     }
     // end of sequence: replay every landed batch once more (many land
     // right after an auto-fold at compactEvery = 3 — the meta-carry
     // seam), then the torn window and a final pruned read
-    now += 1000L
     doReplay()
     assertCounts("after final replay")
     doTornWindow()
     doForKeys()
+    ran.toSet
   }
 
   test("50 seeded-random sequences over the additive chain and both gates match the model") {
     val n = sys.env.get("GRAFT_FUZZ_N").map(_.toInt).getOrElse(50)
-    (0 until n).foreach(i => runSequence(i, seed = 7000L + i))
+    val ran = (0 until n).flatMap(i => runSequence(i, seed = 7000L + i)).toSet
+    // the full run exercises every op
+    if (n >= 50) assert(ran == Set("quota", "lines", "mixture", "upsample", "replay",
+      "torn", "compact", "forKeys", "readAt"), s"ops run: $ran")
   }
 }

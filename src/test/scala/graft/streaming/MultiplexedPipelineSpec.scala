@@ -3,7 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.cdc.{Direction, Registry, TableMapping}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
@@ -198,5 +198,129 @@ class MultiplexedPipelineSpec extends SparkSpec {
       }
       assert(broadcasts.isEmpty, s"the data batch plans broadcasts:\n$plan")
     } finally q.stop()
+  }
+
+  test("a crash at each sink commit point restarts to the uncrashed run's tables and audit") {
+    val min = 60000L
+    def topic(m: TableMapping, d: Direction.Value) = Registry.topicFor(d, m)
+    val (a2t, t2a) = (Direction.AsisToTobe, Direction.TobeToAsis)
+    val batches: Seq[Seq[(String, String)]] = Seq(
+      oneInsertPerTopic,
+      Seq( // an upsert (INSERT on pk 1) and a TARGET_NOT_FOUND (no member 77)
+        topic(Registry.book, a2t) ->
+          env("ASIS_USER", "BOOK_INFO", "c", bookAsis(1, "b-upsert"), t0 + min),
+        topic(Registry.member, a2t) ->
+          env("ASIS_USER", "MEMBER_INFO", "u", memberAsis(77, "ghost"), t0 + min),
+        topic(Registry.book, t2a) ->
+          env("TOBE_USER", "TB_BOOK", "u", bookTobe(100, "b-hundred-2"), t0 + min),
+        topic(Registry.member, t2a) ->
+          env("TOBE_USER", "TB_MEMBER", "d", memberTobe(200, "bob"), t0 + min),
+        topic(Registry.legacyCode, a2t) ->
+          env("ASIS_USER", "LEGACY_CODE", "u", legacyAsis("C1", "code-one-2"), t0 + min),
+        topic(Registry.newService, t2a) ->
+          env("TOBE_USER", "TB_NEW_SERVICE", "c", svcTobe(301, "svc-2"), t0 + min)),
+      Seq( // the upsert's echo, blocked; every topic has events
+        topic(Registry.book, a2t) ->
+          env("ASIS_USER", "BOOK_INFO", "c", bookAsis(1, "b-upsert"), t0 + 2 * min),
+        topic(Registry.book, t2a) ->
+          env("TOBE_USER", "TB_BOOK", "c", bookTobe(101, "b-101"), t0 + 2 * min),
+        topic(Registry.member, a2t) ->
+          env("ASIS_USER", "MEMBER_INFO", "c", memberAsis(3, "carol"), t0 + 2 * min),
+        topic(Registry.member, t2a) ->
+          env("TOBE_USER", "TB_MEMBER", "c", memberTobe(201, "dave"), t0 + 2 * min),
+        topic(Registry.legacyCode, a2t) ->
+          env("ASIS_USER", "LEGACY_CODE", "c", legacyAsis("C2", "code-two"), t0 + 2 * min),
+        topic(Registry.newService, t2a) ->
+          env("TOBE_USER", "TB_NEW_SERVICE", "u", svcTobe(300, "svc-renamed"), t0 + 2 * min)))
+    // the sink finalizes tables in pair order
+    val tables = allPairs.map { case (m, d) => m.targetFor(d).table }
+    // columns stamped with the wall clock (ROADMAP item 2): they differ
+    // between any two runs
+    val wallClock = Map("TB_MEMBER" -> Seq("CREATED_AT", "UPDATED_AT"),
+      "TB_BOOK" -> Seq("CREATED_AT"), "TB_LEGACY_CODE" -> Seq("CREATED_AT"))
+
+    def query(dir: String) = {
+      val store = new SnapshotStore(spark, s"$dir/store")
+      val pipeline = new MultiplexedSyncPipeline(spark, store,
+        trigger = Trigger.ProcessingTime("0 seconds"))
+      val mem = MemoryStream[(String, String)](spark)
+      val source = mem.toDF().toDF("topic", "value")
+      (store, mem, () => pipeline.start(source, allPairs, s"$dir/ckpt"))
+    }
+    def tablesOf(store: SnapshotStore): Map[String, Seq[String]] = tables.map { t =>
+      t -> store.snapshot(t, null).drop(wallClock.getOrElse(t, Nil): _*)
+        .collect().map(_.toString).toSeq.sorted
+    }.toMap
+    def auditOf(store: SnapshotStore): Seq[String] = store.audit()
+      .drop("log_time", "log_date", "change_hash").collect().map(_.toString).toSeq.sorted
+
+    // the uncrashed run
+    val clean = Files.createTempDirectory("graft-mux-clean").toString
+    val (cleanStore, cleanMem, cleanStart) = query(clean)
+    val cq = cleanStart()
+    try batches.foreach { b => cleanMem.addData(b); cq.processAllAvailable() }
+    finally cq.stop()
+    val statuses = cleanStore.audit().select($"status", $"upsert_converted")
+      .as[(String, Boolean)].collect().toSet
+    assert(Set(("LOOP_BLOCKED", false), ("TARGET_NOT_FOUND", false), ("SUCCESS", true))
+      .subsetOf(statuses), s"the events must cover every status: $statuses")
+
+    // the crashed run: each batch meets one fault, a path squatted on
+    // the store's file system, and the query restarts from its
+    // checkpoint once the squat is gone
+    val dir = Files.createTempDirectory("graft-mux-crash").toString
+    val (store, mem, start) = query(dir)
+    def versions = tables.map(store.currentVersion)
+    def crashAndRestart(batch: Seq[(String, String)], squats: Seq[java.io.File],
+        mkSquat: java.io.File => Unit)(check: => Unit): Unit = {
+      squats.foreach(mkSquat)
+      val q = start()
+      try {
+        mem.addData(batch)
+        val e = intercept[StreamingQueryException](q.processAllAvailable())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(c => squats.exists(f => String.valueOf(c.getMessage).contains(f.getName))),
+          s"the query must fail on a squat at $squats: $e")
+        check
+      } finally q.stop()
+      squats.foreach(org.apache.commons.io.FileUtils.forceDelete)
+      val r = start()
+      try r.processAllAvailable() finally r.stop()
+    }
+    def file(f: java.io.File): Unit = { f.getParentFile.mkdirs(); f.createNewFile(); () }
+    val audit = new java.io.File(s"$dir/store/_audit")
+
+    // (c) between the last finalize and the publish: the epoch's date
+    // partition is a file (the next date's too, should the epoch cross
+    // midnight), so the publish's mkdirs fails
+    val day = java.time.LocalDate.now(
+      java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone")))
+    crashAndRestart(batches(0),
+      Seq(day, day.plusDays(1)).map(d => new java.io.File(audit, s"log_date=$d")), file) {
+      assert(versions.forall(_ == 1), s"every table finalized: $versions")
+      assert(new java.io.File(audit, ".epochs").list().length == 1, "the epoch is staged")
+    }
+
+    // (a) before any finalize: the audit staging root is a file
+    val before = versions
+    val epochs = new java.io.File(audit, ".epochs")
+    assert(epochs.list().isEmpty, "a published epoch leaves no staging dir")
+    epochs.delete()
+    crashAndRestart(batches(1), Seq(epochs), file) {
+      assert(versions == before, "no table finalized")
+    }
+
+    // (b) after 3 of 6 tables are finalized: the 4th table's pointer
+    // tmp file is a directory, so its flip fails
+    val k = 3
+    val mid = versions
+    crashAndRestart(batches(2), Seq(new java.io.File(s"$dir/store/${tables(k)}/_current.tmp")),
+      d => { d.mkdirs(); () }) {
+      assert(versions.zip(mid).map { case (v, m) => v - m } ==
+        Seq.fill(k)(1) ++ Seq.fill(tables.size - k)(0), s"$k tables finalized: $versions")
+    }
+
+    assert(tablesOf(store) == tablesOf(cleanStore))
+    assert(auditOf(store) == auditOf(cleanStore))
   }
 }

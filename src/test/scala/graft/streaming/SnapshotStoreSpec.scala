@@ -327,35 +327,6 @@ class SnapshotStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException](store.changeFeed("T", 2, 99))
   }
 
-  test("vacuum reclaims pre-base history; reads below the horizon refuse loudly") {
-    val (store, _) = newStore(compactEvery = 3)
-    commit(store, (1L, "INSERT", 1, "a"))                      // v1
-    commit(store, (2L, "INSERT", 2, "b"))                      // v2
-    commit(store, (3L, "UPDATE", 1, "a2"))                     // v3 (compacts → base)
-    commit(store, (4L, "INSERT", 3, "c"))                      // v4
-    // nothing below the base may survive; everything at/above must
-    val removed = store.vacuum("T")
-    assert(removed == Seq(1, 2), s"got $removed")
-    assert(store.horizon("T") == 3)
-    assert(store.snapshot("T", null).as[(Int, String)].collect().toMap ==
-      Map(1 -> "a2", 2 -> "b", 3 -> "c"))
-    assert(store.snapshotAt("T", 3).as[(Int, String)].collect().toMap ==
-      Map(1 -> "a2", 2 -> "b"))
-    intercept[IllegalArgumentException](store.snapshotAt("T", 2))
-    // feed from horizon-1 still has every delta it needs; lower refuses
-    assert(store.changeFeed("T", 2, 4).count() == 2)
-    intercept[IllegalArgumentException](store.changeFeed("T", 1, 4))
-    assert(store.netChanges("T", 3, 4)
-      .as[(Int, String, String)].collect().toSet == Set((3, "INSERT", "c")))
-    // idempotent; and a never-compacted table reclaims nothing
-    assert(store.vacuum("T").isEmpty)
-    val (fresh, _) = newStore(compactEvery = 100)
-    commit(fresh, (1L, "INSERT", 1, "a"))
-    commit(fresh, (2L, "INSERT", 2, "b"))
-    assert(fresh.vacuum("T").isEmpty)
-    assert(fresh.horizon("T") == 1)
-  }
-
   test("netChanges classifies with apply semantics: nets, TARGET_NOT_FOUND, deletes") {
     val (store, _) = newStore(compactEvery = 100)
     commit(store, (1L, "INSERT", 1, "a"), (2L, "INSERT", 2, "b"),
@@ -379,7 +350,7 @@ class SnapshotStoreSpec extends SparkSpec {
       Map(1 -> "a2", 3 -> "c"))
   }
 
-  test("vacuum on an additive chain: at/above-horizon exact, below refuses, commit() refuses") {
+  test("additive chain reads exactly across folds; commit() refuses it") {
     val (store, _) = newStore(compactEvery = 3)
     def add(rows: (String, Long)*): Int =
       store.commitAdditive("A", rows.toDF("k", "state_cnt"))
@@ -392,23 +363,12 @@ class SnapshotStoreSpec extends SparkSpec {
       if (i == 5) add(s"k$i" -> 1L, "k2" -> -1L) else add(s"k$i" -> 1L)
     }
     val full = (1 to 10).map(i => s"k$i" -> 1L).toMap - "k2"
-    assert(snapAt(10) == full)
-
-    val reclaimed = store.vacuum("A")
-    // newest base is v9: everything below it is reclaimable, v9 (base)
-    // and v10 (outstanding delta) must survive — the current snapshot
-    // reconstructs from them
-    assert(store.horizon("A") == 9)
-    assert(reclaimed == (1 to 8), s"reclaimed $reclaimed")
-    // reads at/above the horizon stay EXACT after the delete sweep
+    // the newest base is v9 and v10 its one outstanding delta: both
+    // read back exactly
     assert(snapAt(9) == full - "k10")
     assert(snapAt(10) == full)
     assert(store.additiveSnapshot("A", null)
       .as[(String, Long)].collect().toMap == full)
-    // below-horizon time travel refuses loudly instead of silently
-    // mis-reconstructing over missing files
-    val e = intercept[IllegalArgumentException] { snapAt(8) }
-    assert(e.getMessage.contains("below the vacuum horizon"))
     // and the full-base CDC writer refuses the additive table — a
     // commit() here would silently mix kinds mid-chain
     val e2 = intercept[IllegalStateException] {
@@ -417,155 +377,25 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(e2.getMessage.contains("ADDITIVE"))
   }
 
-  test("timestamp resolution composes with additive chains") {
-    // commitAdditive stamps versions like every committing path, and
-    // versionAsOf is kind-agnostic (it reads only the ts markers) — so
-    // additiveSnapshotAt(versionAsOf(ts)) is additive time travel
-    val (store, _) = newStore(compactEvery = 100)
-    var now = 1000L
-    store.clock = () => now
-    store.commitAdditive("A", Seq(("k1", 1L)).toDF("k", "state_cnt"))
-    now = 2000L
-    store.commitAdditive("A", Seq(("k1", 1L), ("k2", 3L)).toDF("k", "state_cnt"))
-    assert(store.versionAsOf("A", 1500L) == 1)
-    assert(store.additiveSnapshotAt("A", store.versionAsOf("A", 1500L), null)
-      .as[(String, Long)].collect().toMap == Map("k1" -> 1L))
-    assert(store.additiveSnapshotAt("A", store.versionAsOf("A", 2000L), null)
-      .as[(String, Long)].collect().toMap == Map("k1" -> 2L, "k2" -> 3L))
-  }
-
-  test("deleteWhere appends DELETE deltas; feed, net changes and replays agree") {
-    val (store, _) = newStore(compactEvery = 100)
-    commit(store, (1L, "INSERT", 1, "keep"), (2L, "INSERT", 2, "purge"),
-      (3L, "INSERT", 3, "purge"))
-    val vBefore = store.currentVersion("T")
-    val n = store.deleteWhere("T",
-      org.apache.spark.sql.functions.col("VAL") === "purge", "ID",
-      seq = 100L, meta = Some("erasure-42"))
-    assert(n == 2L)
-    assert(store.snapshot("T", null).as[(Int, String)].collect().toMap ==
-      Map(1 -> "keep"))
-    // O(matching): ONE new version, two DELETE rows carrying the
-    // erased values (auditable), visible to the change feed
-    assert(store.currentVersion("T") == vBefore + 1)
-    val feed = store.changeFeed("T", vBefore, vBefore + 1)
-      .select("operation", "ID", "VAL").as[(String, Int, String)]
-      .collect().toSet
-    assert(feed == Set(("DELETE", 2, "purge"), ("DELETE", 3, "purge")))
-    // the serving-sync path sees plain CDC deletes
-    val net = store.netChanges("T", vBefore, vBefore + 1)
-      .select("ID", "change_type").as[(Int, String)].collect().toSet
-    assert(net == Set((2, "DELETE"), (3, "DELETE")))
-    assert(store.currentMeta("T").contains("erasure-42"))
-    // a no-op match commits NOTHING (no version churn); the matching
-    // rows are already gone so the same predicate re-run is idempotent
-    assert(store.deleteWhere("T",
-      org.apache.spark.sql.functions.col("VAL") === "purge", "ID", 101L) == 0L)
-    assert(store.currentVersion("T") == vBefore + 1)
-  }
-
-  test("updateWhere rewrites matching rows in place; set can read the old row") {
-    import org.apache.spark.sql.functions.{col, concat, lit}
-    val (store, _) = newStore(compactEvery = 100)
-    commit(store, (1L, "INSERT", 1, "alice"), (2L, "INSERT", 2, "bob"),
-      (3L, "INSERT", 3, "alice"))
-    val vBefore = store.currentVersion("T")
-    // expression over the matched row: masking that keeps a prefix
-    val n = store.updateWhere("T", col("VAL") === "alice", "ID", 50L,
-      set = Map("VAL" -> concat(col("VAL").substr(0, 1), lit("***"))))
-    assert(n == 2L)
-    assert(store.snapshot("T", null).as[(Int, String)].collect().toMap ==
-      Map(1 -> "a***", 2 -> "bob", 3 -> "a***"))
-    assert(store.currentVersion("T") == vBefore + 1, "one O(matching) delta")
-    val feed = store.changeFeed("T", vBefore, vBefore + 1)
-      .select("operation", "ID", "VAL").as[(String, Int, String)]
-      .collect().toSet
-    assert(feed == Set(("UPDATE", 1, "a***"), ("UPDATE", 3, "a***")))
-    // refusals: unknown set column, pk rewrite
-    val e1 = intercept[IllegalArgumentException] {
-      store.updateWhere("T", col("VAL") === "bob", "ID", 51L,
-        set = Map("NOPE" -> lit("x")))
-    }
-    assert(e1.getMessage.contains("schema evolution"))
-    val e2 = intercept[IllegalArgumentException] {
-      store.updateWhere("T", col("VAL") === "bob", "ID", 51L,
-        set = Map("ID" -> lit(9)))
-    }
-    assert(e2.getMessage.contains("DELETE + INSERT"))
-  }
-
-  test("cloneAt creates an independent table: fresh chain, kinds carried, dest refusals") {
-    import org.apache.spark.sql.functions.col
-    val (store, _) = newStore(compactEvery = 100)
-    commit(store, (1L, "INSERT", 1, "a"), (2L, "INSERT", 2, "b"))
-    commit(store, (3L, "UPDATE", 1, "a2"))
-    // CDC clone at a historical version
-    store.cloneAt("T", 1, "T_V1")
-    assert(store.snapshot("T_V1", null).as[(Int, String)].collect().toMap ==
-      Map(1 -> "a", 2 -> "b"))
-    assert(store.currentVersion("T_V1") == 1, "clone history starts fresh")
-    assert(store.currentMeta("T_V1").contains("clone:T@1"))
-    // independence both ways: evolve the source, vacuum neither leaks
-    commit(store, (4L, "DELETE", 2, "b"))
-    assert(store.snapshot("T_V1", null).count() == 2)
-    store.deleteWhere("T_V1", col("ID") === 1, "ID", 10L)
-    assert(store.snapshot("T", null).as[(Int, String)].collect().toMap ==
-      Map(1 -> "a2"))
-    // additive clone keeps the kind and measure columns
-    store.commitAdditive("ADD", Seq(("x", 2L), ("y", 1L)).toDF("k", "state_cnt"))
-    store.commitAdditive("ADD", Seq(("x", -1L)).toDF("k", "state_cnt"))
-    store.cloneAt("ADD", 2, "ADD_C")
-    assert(store.additiveSnapshot("ADD_C", null).as[(String, Long)]
-      .collect().toMap == Map("x" -> 1L, "y" -> 1L))
-    // the clone is itself a live additive chain
-    store.commitAdditive("ADD_C", Seq(("y", 5L)).toDF("k", "state_cnt"))
-    assert(store.additiveSnapshot("ADD_C", null).as[(String, Long)]
-      .collect().toMap == Map("x" -> 1L, "y" -> 6L))
-    // a clone is a CREATE: existing destinations refuse loudly
-    val e = intercept[IllegalArgumentException] { store.cloneAt("T", 1, "T_V1") }
-    assert(e.getMessage.contains("already exists"))
-  }
-
-  test("timestamp time travel: snapshotAsOf / changeFeedSince resolve by commit instant") {
+  test("history stamps each version's commit_ts at its commit") {
     val (store, _) = newStore(compactEvery = 3)
-    var now = 1000L
-    store.clock = () => now
-    commit(store, (1L, "INSERT", 1, "a")) // v1 @ 1000
-    now = 2000L
-    commit(store, (2L, "UPDATE", 1, "a2"), (3L, "INSERT", 2, "b")) // v2 @ 2000
-    now = 3000L
-    commit(store, (4L, "DELETE", 2, "b")) // v3 @ 3000, 3rd commit ⇒ fold base
-
-    // a ts BETWEEN two commits resolves to the earlier one
-    assert(store.versionAsOf("T", 1500L) == 1)
-    assert(store.snapshotAsOf("T", 1500L).as[(Int, String)].collect().toMap ==
-      Map(1 -> "a"))
-    // the exact commit instant resolves to that commit
-    assert(store.snapshotAsOf("T", 2000L).as[(Int, String)].collect().toMap ==
-      Map(1 -> "a2", 2 -> "b"))
-    // before the first commit = the empty table (schema supplied)
-    assert(store.versionAsOf("T", 500L) == 0)
-    assert(store.snapshotAsOf("T", 500L,
-      store.snapshot("T", null).schema).count() == 0L)
-    // changeFeedSince: exactly the events committed after that instant
-    val feed = store.changeFeedSince("T", 1000L)
-    assert(feed.select("commit_version").distinct()
-      .as[Int].collect().toSet == Set(2, 3))
-    assert(feed.count() == 3L)
-    // history carries the commit timestamps (the fold base shares v3's)
+    // wall-clock readings just before and just after each commit
+    val windows = Seq(
+      Seq((1L, "INSERT", 1, "a")),
+      Seq((2L, "UPDATE", 1, "a2"), (3L, "INSERT", 2, "b")),
+      Seq((4L, "DELETE", 2, "b"))).map { rows => // 3rd commit ⇒ fold base
+      val before = System.currentTimeMillis()
+      val v = commit(store, rows: _*)
+      v -> (before, System.currentTimeMillis())
+    }.toMap
+    // one stamp per version (the fold base shares v3's), inside its window
     val hts = store.history("T").select("version", "commit_ts")
-      .distinct().as[(Int, Long)].collect().toSet
-    assert(hts == Set((1, 1000L), (2, 2000L), (3, 3000L)))
-
-    // vacuum reclaims v1/v2 (below the v3 fold base): a ts whose answer
-    // version was reclaimed must REFUSE, not round up to the horizon
-    store.vacuum("T")
-    intercept[IllegalArgumentException](store.snapshotAsOf("T", 2500L))
-    intercept[IllegalArgumentException](store.changeFeedSince("T", 1500L))
-    // at/after the horizon instant still resolves
-    assert(store.versionAsOf("T", 3000L) == 3)
-    assert(store.snapshotAsOf("T", 9999L).as[(Int, String)].collect().toMap ==
-      Map(1 -> "a2"))
+      .distinct().as[(Int, Long)].collect()
+    assert(hts.map(_._1).sorted.toSeq == Seq(1, 2, 3), s"history was ${hts.toSeq}")
+    hts.foreach { case (v, ts) =>
+      val (lo, hi) = windows(v)
+      assert(lo <= ts && ts <= hi, s"v$v stamped $ts outside [$lo, $hi]")
+    }
   }
 
   test("compactAdditive folds the chain, carries meta, and lays out bucketed bases") {
@@ -595,46 +425,21 @@ class SnapshotStoreSpec extends SparkSpec {
     intercept[IllegalStateException](store.compactAdditive("T"))
   }
 
-  test("versionAsOf refuses on pre-stamping history instead of resolving empty") {
-    val (store, dir) = newStore(compactEvery = 100)
-    var now = 1000L
-    store.clock = () => now
-    commit(store, (1L, "INSERT", 1, "a")) // v1 @ 1000
-    now = 2000L
-    commit(store, (2L, "INSERT", 2, "b")) // v2 @ 2000
-    // simulate a chain written BEFORE timestamp stamping existed: strip
-    // v1's marker — whether v1 predates any given ts is now unknowable
-    Files.delete(Paths.get(s"$dir/T/d1/_graft_ts"))
-    // ts below every surviving stamp + unstamped history ⇒ refuse (the
-    // old behavior silently returned 0 = "table was empty then")
-    val e = intercept[IllegalArgumentException](store.versionAsOf("T", 500L))
-    assert(e.getMessage.contains("pre-stamping"))
-    intercept[IllegalArgumentException](store.snapshotAsOf("T", 1500L))
-    intercept[IllegalArgumentException](store.changeFeedSince("T", 500L))
-    // at/after a surviving stamp still resolves normally
-    assert(store.versionAsOf("T", 2000L) == 2)
-    // a FULLY stamped chain keeps the documented 0 = before-first-commit
-    val (s2, _) = newStore(compactEvery = 100)
-    s2.clock = () => 5000L
-    s2.commitDelta("U", delta((1L, "INSERT", 1, "a")), "ID", "seq", Seq("VAL"))
-    assert(s2.versionAsOf("U", 4000L) == 0)
-  }
-
-  test("history lists live versions with kind, meta and horizon flags") {
+  test("history lists every version with kind, meta and file counts") {
     val (store, _) = newStore(compactEvery = 3)
     commit(store, (1L, "INSERT", 1, "a"))
     commit(store, (2L, "INSERT", 2, "b"))
     commit(store, (3L, "UPDATE", 1, "a2")) // 3rd commit ⇒ compaction base at v3
-    store.deleteWhere("T", org.apache.spark.sql.functions.col("ID") === 2,
-      "ID", 4L, meta = Some("gdpr"))
-    store.vacuum("T") // reclaims v1/v2 (below the v3 base)
+    store.commitDelta("T", delta((4L, "DELETE", 2, "b")), "ID", "seq", Seq("VAL"),
+      meta = Some("gdpr"))
     val h = store.history("T")
-      .select("version", "kind", "meta", "above_horizon")
-      .as[(Int, String, String, Boolean)].collect().toSet
-    // v3 carries BOTH the delta and the compaction base; v1/v2 reclaimed
+      .select("version", "kind", "meta")
+      .as[(Int, String, String)].collect().toSet
+    // v3 carries BOTH the delta and the compaction base
     assert(h == Set(
-      (3, "delta", null, true), (3, "base", null, true),
-      (4, "delta", "gdpr", true)))
+      (1, "delta", null), (2, "delta", null),
+      (3, "delta", null), (3, "base", null),
+      (4, "delta", "gdpr")))
     assert(store.history("T").agg(
       org.apache.spark.sql.functions.sum("n_files")).collect()(0)
       .getLong(0) > 0, "file counts must come from real listings")

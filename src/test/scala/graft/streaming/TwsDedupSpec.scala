@@ -9,7 +9,8 @@ import java.nio.file.Files
 /** The transformWithState loop dedup (RocksDB state store provider):
   * through the sync query across AvailableNow restarts over a file
   * source, so every step also proves the keyed state reloads from the
-  * checkpoint; and the operator alone under a short TTL.
+  * checkpoint; the operator alone under a short TTL; and the operator
+  * with no-data micro-batches on and off.
   */
 class TwsDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -93,5 +94,58 @@ class TwsDedupSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
+  }
+
+  test("no-data batches change no decision: same rows and drops with them on or off") {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val (t0, min) = (1768284000000L, 60000L)
+    // h1; h2 25 min later, so h1's TTL timer (t0 + 10 min) falls due;
+    // h1 again; h2's echo inside its 5-min window; then h3 at t0 + 3 min,
+    // behind the 10-minute watermark
+    val events = Seq("h1" -> 0L, "h2" -> 25 * min, "h1" -> 26 * min,
+      "h2" -> 27 * min, "h3" -> 3 * min)
+    /** (emitted rows, rows dropped by watermark, no-data batches run) */
+    def run(noDataBatches: Boolean): (Seq[(String, Long, Boolean)], Long, Int) = {
+      val ckpt = Files.createTempDirectory("graft-tws-nodata").toString
+      val name = s"tws_nodata_$noDataBatches"
+      val input = MemoryStream[(String, java.sql.Timestamp)](spark)
+      val saved = Seq(provider, noData).map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(provider,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      spark.conf.set(noData, noDataBatches.toString)
+      val q = try {
+        LoopDedupTws(input.toDF().toDF("change_hash", "event_ts")
+            .withWatermark("event_ts", "10 minutes"))
+          .writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", ckpt).outputMode("append").start()
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      try {
+        events.foreach { case (h, dt) =>
+          input.addData(Seq((h, new java.sql.Timestamp(t0 + dt))))
+          q.processAllAvailable()
+        }
+        val rows = spark.table(name)
+          .select($"change_hash", $"event_ts", $"loop_blocked")
+          .as[(String, java.sql.Timestamp, Boolean)].collect()
+          .map(r => (r._1, r._2.getTime - t0, r._3)).toSeq.sorted
+        val dropped = q.recentProgress.flatMap(_.stateOperators)
+          .map(_.numRowsDroppedByWatermark).sum
+        val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).distinct
+        val batches = new java.io.File(ckpt, "commits").list().count(_.forall(_.isDigit))
+        (rows, dropped, batches - dataBatches.length)
+      } finally q.stop()
+    }
+    val (rowsOn, droppedOn, noDataOn) = run(noDataBatches = true)
+    val (rowsOff, droppedOff, noDataOff) = run(noDataBatches = false)
+    assert(rowsOn == Seq(("h1", 0L, false), ("h1", 26 * min, false),
+      ("h2", 25 * min, false), ("h2", 27 * min, true)), s"rows: $rowsOn")
+    assert(rowsOff == rowsOn)
+    assert(droppedOn == 1L && droppedOff == 1L, s"dropped: $droppedOn / $droppedOff")
+    assert(noDataOn >= 1, "the first run must run a no-data batch")
+    assert(noDataOff == 0, s"the second run ran $noDataOff no-data batches")
   }
 }
