@@ -17,8 +17,11 @@ import org.apache.spark.sql.functions._
   * UPDATE never changes existence, so "does the row exist when event i
   * runs" is a window expression over the preceding INSERT/DELETE ops
   * seeded by base membership — no driver-side loop, no per-row JDBC.
-  * At 100 TB: base⋈changes is a shuffle hash join on pk, the window and
-  * final dedup reuse the same hash partitioning (no extra exchange).
+  * The target reads each base row as an INSERT ordered before every
+  * change, so base ⊕ changes is one replay: one scan of each input, one
+  * hash exchange on pk and one aggregate, no join — the table read as
+  * a log replayed over a checkpoint. The audit alone joins the changes
+  * to base membership, and only when a caller uses it.
   */
 object Apply {
 
@@ -26,7 +29,9 @@ object Apply {
 
   /** Apply a batch of ordered change events to a base snapshot.
     *
-    * @param base     current target-table snapshot: pk + dataCols
+    * @param base     current target-table snapshot: pk + dataCols. Its
+    *                 pks must be unique and non-null (a snapshot is): the
+    *                 target folds rows that share a pk into one
     * @param changes  events: `operation` (INSERT/UPDATE/DELETE), seqCol,
     *                 pk, dataCols
     * @param pk       primary-key column name
@@ -51,30 +56,31 @@ object Apply {
 
     val audit = auditFrom(ch, Seq(pk), seqCol, auditPassthrough)
 
-    // ---- target path: ONE hash aggregate, no sort. The key insight:
-    // whenever a key finally exists, its LAST event necessarily applied
-    // (it is either the final INSERT, or an UPDATE after the
-    // existence-making event — skipped events can only precede the last
-    // INSERT/DELETE), so the final values are simply max_by(seq). A key
-    // exists iff its last INSERT/DELETE is an INSERT, else iff it was
-    // in the base and no INSERT/DELETE touched it.
-    val perKey = ch.groupBy(col(pk)).agg(
-      max_by(struct(dataCols.map(col): _*), col(seqCol)).as("__last"),
-      max(when(col("operation") =!= "UPDATE", struct(col(seqCol), col("operation"))))
-        .as("__last_id"),
-      first(col("__in_base")).as("__in_base"))
-
-    val survivors = perKey
-      .filter(
-        when(col("__last_id").getField("operation") === "INSERT", lit(true))
-          .when(col("__last_id").getField("operation") === "DELETE", lit(false))
-          .otherwise(col("__in_base")))
+    // ---- target path: ONE hash exchange, no join. A base row is an
+    // INSERT ordered before every change, so the table is one replay of
+    // base ∪ changes. Whenever a key finally exists, its LAST event
+    // applied (the final INSERT — a base row counts as one — or an
+    // UPDATE after it; skipped events can only precede the last
+    // INSERT/DELETE), so the final values are max_by(order), and a key
+    // exists iff its last INSERT/DELETE is an INSERT.
+    val order = "__order"
+    val seqType = changes.schema(seqCol).dataType
+    def orderKey(src: Int, seq: Column) =
+      struct(lit(src).as("src"), seq.as("seq")).as(order)
+    val events = base
+      .select(col(pk) +: lit("INSERT").as("operation") +:
+        orderKey(0, lit(null).cast(seqType)) +: dataCols.map(col): _*)
+      .unionByName(changes
+        .select(col(pk) +: col("operation") +:
+          orderKey(1, col(seqCol)) +: dataCols.map(col): _*))
+    val target = events.groupBy(col(pk)).agg(
+      max_by(struct(dataCols.map(col): _*), col(order)).as("__last"),
+      max(when(col("operation") =!= "UPDATE", struct(col(order), col("operation"))))
+        .as("__last_id"))
+      .filter(col("__last_id").getField("operation") === "INSERT")
       .select(col(pk) +: dataCols.map(c => col("__last").getField(c).as(c)): _*)
 
-    val untouched = base.join(ch.select(pk).distinct(), Seq(pk), "left_anti")
-      .select(col(pk) +: dataCols.map(col): _*)
-
-    ApplyResult(untouched.unionByName(survivors), audit)
+    ApplyResult(target, audit)
   }
 
   /** Audit-only evaluation against a precomputed pk-membership set —

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.cdc.Registry
 
 /** S8: the reference dashboard's five inspection endpoints
   * (`SimulatorController.java:66-297`) as SQL over temp views
@@ -16,12 +17,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Dashboard {
 
-  /** Register the store-backed views: one per committed synced table
-    * (current snapshot) plus `SYNC_LOG` over the audit log.
+  /** Register the store-backed views: one per synced table (current
+    * snapshot) plus `SYNC_LOG` over the audit log. A registered table
+    * that has not synced yet reads empty with its target schema, so its
+    * pages serve no rows instead of failing.
     */
   def registerViews(spark: SparkSession, store: SnapshotStore,
       tables: Seq[String]): Unit = {
-    tables.foreach(t => store.snapshot(t, null).createOrReplaceTempView(t))
+    val sides = Registry.all.flatMap(m => Seq(m.asis, m.tobe))
+    tables.foreach { t =>
+      val schema = sides.find(_.table == t).map(Registry.targetSchema).orNull
+      store.snapshot(t, schema).createOrReplaceTempView(t)
+    }
     store.audit().createOrReplaceTempView("SYNC_LOG")
   }
 

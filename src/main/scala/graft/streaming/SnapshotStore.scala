@@ -361,6 +361,12 @@ final class SnapshotStore(
           col("_metadata.file_path"), "/d(\\d+)/[^/]+$", 1).cast("int"))
   }
 
+  /** No rows, `schema`'s columns: a local relation, which the optimizer
+    * prunes from unions and joins.
+    */
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
   /** Current snapshot; empty DataFrame with the given schema at v0. */
   def snapshot(table: String, schema: StructType): DataFrame =
     snapshotAt(table, currentVersion(table), schema)
@@ -377,12 +383,17 @@ final class SnapshotStore(
       .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
   }
 
-  /** Time travel: reconstruct any committed version (0 = empty). */
+  /** Time travel: reconstruct any committed version (0 = empty, with
+    * `schema`'s columns — a table that has not synced yet has no layout
+    * of its own to read).
+    */
   def snapshotAt(table: String, version: Int, schema: StructType = null): DataFrame = {
     refuseAdditive(table, "snapshotAt")
-    if (version == 0)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (version == 0) {
+      require(schema != null,
+        s"snapshotAt: table $table has no committed version; pass its schema to read it empty")
+      return emptyFrame(schema)
+    }
     chainAt(table, version) match {
       case (base, None) => // the version is itself a base
         if (schema == null) base.get else withMissingAsNull(base.get, schema.fields.toSeq)
@@ -394,9 +405,9 @@ final class SnapshotStore(
         val seqCol = fields(0).name
         val pk = fields(2).name
         val dataCols = fields.drop(3).map(_.name).toSeq
-        val start = base.getOrElse(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          if (schema != null) schema else StructType(fields.drop(2))))
+        // no base yet: an empty local relation in the delta layout,
+        // which the optimizer prunes from the replay
+        val start = base.getOrElse(emptyFrame(StructType(fields.drop(2))))
         // a pre-evolution base lacks columns added later in the chain
         val reconciled = withMissingAsNull(start, fields.drop(3).toSeq)
         val ordered = deltas.withColumn("__ord", struct(col("__v"), col(seqCol)))
@@ -477,8 +488,7 @@ final class SnapshotStore(
     val feedPks = feed.select(col(pkName)).distinct()
     val before =
       (if (fromVersion == 0)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(f.drop(2)))
+        emptyFrame(StructType(f.drop(2)))
       else
         // a range crossing an add-column evolution: the before image
         // reconstructs at the PRE-evolution version and lacks columns
@@ -581,7 +591,7 @@ final class SnapshotStore(
     // a local empty relation, which the optimizer prunes: a chain with
     // no base then costs no join input
     val basePks = chains.flatMap(_._1).reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), keySchema))
+      emptyFrame(keySchema))
     chains.flatMap(_._2).reduceOption(_.unionByName(_)) match {
       case None => basePks
       case Some(deltas) =>
@@ -1075,7 +1085,7 @@ final class SnapshotStore(
       spark.read.schema(SnapshotStore.auditSchema)
         .option("basePath", auditRoot).parquet(dates: _*)
     else
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), SnapshotStore.auditSchema)
+      emptyFrame(SnapshotStore.auditSchema)
   }
 }
 

@@ -79,6 +79,23 @@ class DashboardSpec extends SparkSpec {
     }
   }
 
+  test("a table that has not synced yet serves empty pages with its columns") {
+    val store = new SnapshotStore(spark, Files.createTempDirectory("graft-dash").toString)
+    val book = graft.cdc.Registry.book.tobe
+    Dashboard.registerViews(spark, store, Seq(book.table))
+    val cols = book.columnNames
+    val data = Dashboard.data(spark, book.table, book.pk, cols)
+    val cdc = Dashboard.cdcData(spark, book.table, book.pk)
+    val staging = Dashboard.stagingData(spark, book.table, book.pk)
+    for (page <- Seq(data, cdc, staging)) {
+      assert(page.collect().isEmpty)
+      assert(page.columns.toSeq == cols)
+    }
+    // without a schema an unsynced table has no layout: a clear refusal
+    val e = intercept[IllegalArgumentException](store.snapshotAt(book.table, 0, null))
+    assert(e.getMessage.contains(book.table))
+  }
+
   test("an empty audit log still has its columns: pages and stats return no rows") {
     val store = new SnapshotStore(spark, Files.createTempDirectory("graft-dash").toString)
     Dashboard.registerViews(spark, store, Seq.empty)

@@ -297,6 +297,43 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(store.existingPks("T", sch, "ID").as[Int].collect().toSet == Set(1, 3))
   }
 
+  test("snapshotAt over a base plus 2 deltas plans one hash exchange and no join; " +
+      "a dashboard page over it is a top-K above the aggregate") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val (store, _) = newStore(compactEvery = 100)
+    store.commit("T", Seq((1, "x"), (2, "y"), (4, "w")).toDF("ID", "VAL"))
+    commit(store, (1L, "UPDATE", 1, "x2"), (2L, "INSERT", 3, "z"))
+    commit(store, (1L, "DELETE", 2, "y"), (2L, "UPDATE", 5, "ghost"))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val snap = store.snapshotAt("T", 3)
+      val plan: SparkPlan = snap.queryExecution.executedPlan
+      val hashExchanges = plan.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      assert(hashExchanges.size == 1, plan.toString)
+      assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, plan.toString)
+      assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan.toString)
+      val scans = plan.collect { case f: FileSourceScanExec => f.relation.location.rootPaths.size }
+      // the base once (one dir), the two deltas once (one multi-path read)
+      assert(scans.sorted == Seq(1, 2), plan.toString)
+      assert(snap.as[(Int, String)].collect().toMap == Map(1 -> "x2", 3 -> "z", 4 -> "w"))
+
+      Dashboard.registerViews(spark, store, Seq("T"))
+      val page = Dashboard.data(spark, "T", "ID", Seq("ID", "VAL"))
+      val pagePlan = page.queryExecution.executedPlan
+      val topK = pagePlan.collect { case t: TakeOrderedAndProjectExec => t }
+      assert(topK.size == 1, pagePlan.toString)
+      assert(topK.head.collect { case a: BaseAggregateExec => a }.nonEmpty, pagePlan.toString)
+      assert(page.as[(Int, String)].collect().toSeq == Seq(1 -> "x2", 3 -> "z", 4 -> "w"))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("full commit() versions interleave with deltas as bases") {
     val (store, _) = newStore(compactEvery = 100)
     store.commit("T", Seq((1, "x"), (2, "y")).toDF("ID", "VAL"))
